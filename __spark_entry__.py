@@ -246,10 +246,10 @@ FROM r
 
 
 def q_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from data_quality_assessment_spark.functions.udfs import annotate_udf
+    from data_quality_assessment_spark.functions.udfs import enrich_udf
 
     d = _load(spark, sf_dir, "documents")
-    ann = annotate_udf(F.lit(None).cast("binary"), F.col("text"))
+    ann = enrich_udf(F.lit(None).cast("binary"), F.col("text"))
     return d.select("doc_id", ann.lang_pred.alias("lang_pred"))
 
 
@@ -2740,8 +2740,8 @@ FROM phf
 
 
 def q_doc_ppl(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r6: dedicated vectorized ppl UDF — annotate_udf computed langid/
-    # top-bigram/extraction per row only for .ppl to be read (opaque
+    # r6: dedicated vectorized ppl UDF — the fused enrich UDF would
+    # compute every other field per row only for .ppl to be read (opaque
     # struct UDFs are not field-pruned); values bit-identical
     from data_quality_assessment_spark.functions.udfs import ppl_udf
 

@@ -108,9 +108,11 @@ def xxh64_arrow(arr) -> np.ndarray:
 
 # ---------------------------------------------------------------------------
 # vectorized fast-path signatures (minhash / simhash) — bit-identical
-# twins of the xxhash64 HOF expression chains in operators/dedup.py
+# twins of Spark's xxhash64 HOF expression chains (kept verbatim in
+# tests/test_fasthash.py as the reference)
 # ---------------------------------------------------------------------------
 
+# p = 2^31-1 keeps a*h < 2^62, so the Spark chain cannot overflow in ANSI mode
 _P31 = (1 << 31) - 1
 
 

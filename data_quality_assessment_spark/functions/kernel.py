@@ -67,12 +67,6 @@ ENRICH_COLS = (
 _VECTOR_MIN_ROWS = 16
 
 
-def enrich_doc(html: bytes | None, text: str | None) -> tuple:
-    """Single-document enrich (the oracle-facing scalar form)."""
-    cols = enrich_batch([html], [text])
-    return tuple(cols[k][0] for k in ENRICH_COLS)
-
-
 def enrich_batch(htmls, texts) -> dict[str, list]:
     """Columnar enrich over parallel sequences of (html, text).
 
@@ -338,9 +332,9 @@ def _lp_sums(par, nw, ids, model, n):
 def ppl_batch(texts, model=None) -> list[float]:
     """Vectorized perplexity over a sequence of (possibly null) texts —
     bit-identical to ``model.perplexity(txt, tokenize(txt))`` per doc
-    (non-strings score as empty text, matching annotate_udf). Used by
-    ``udfs.ppl_udf`` so perplexity-only queries skip the rest of the
-    enrich kernel."""
+    (non-strings score as empty text, matching the enrich kernel's
+    null-text rows). Used by ``udfs.ppl_udf`` so perplexity-only
+    queries skip the rest of the enrich kernel."""
     import pyarrow as pa
 
     if model is None:

@@ -16,10 +16,9 @@ import math
 
 import numpy as np
 
-from .textcore import STOPWORDS, VOCAB, VOCAB_INDEX, tokenize, word_ids
+from .textcore import STOPWORDS, VOCAB, tokenize, word_ids
 
 _V = len(VOCAB)
-_INDEX = VOCAB_INDEX
 UNK = _V  # out-of-vocab id (== textcore.VOCAB_UNK)
 
 _SMOOTH = 0.1

@@ -20,7 +20,6 @@ Tokenization contract (pinned, used identically in Spark SQL and Python):
 
 from __future__ import annotations
 
-import math
 import re
 
 # ---------------------------------------------------------------------------
@@ -367,14 +366,3 @@ def extract_text(html_bytes: bytes) -> str:
     if html_bytes is None:
         return ""
     return _TAG_RE.sub("", html_bytes.decode("utf-8", errors="replace"))
-
-
-def entropy_bits_per_char(text: str) -> float:
-    """Shannon entropy of the character distribution (gibberish signal)."""
-    if not text:
-        return 0.0
-    freq: dict[str, int] = {}
-    for ch in text:
-        freq[ch] = freq.get(ch, 0) + 1
-    n = len(text)
-    return -sum((c / n) * math.log2(c / n) for c in freq.values())

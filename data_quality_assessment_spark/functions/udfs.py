@@ -1,18 +1,20 @@
-"""Arrow-batched pandas UDFs — the only Python in the hot path.
+"""Arrow-batched UDFs — the only Python in the hot path.
 
 ONE JVM↔Python boundary in the flagship plan (SURVEY.md §4):
 ``enrich_udf`` — the fused extract + langid + perplexity + repetition +
 text-stats + scrub kernel, one ArrowEvalPython node backed by the
-batch-vectorized ``kernel.enrich_batch`` (r6). ``annotate_udf`` /
-``scrub_udf`` remain for callers composing the stages separately, and
-``ppl_udf`` serves perplexity-only queries. All use the Iterator form so
-model/regex state is initialized once per executor Python worker and
-reused across Arrow batches ("model broadcast once per executor, no
-per-row Python" — BASELINE.json north_star).
+batch-vectorized ``kernel.enrich_batch_arrow``. Every caller that needs
+any of those fields reads it off this one UDF. ``ppl_udf`` is the one
+narrow UDF: opaque struct UDFs are not field-pruned, so a
+perplexity-only query would pay for every other field (the ppl-only UDF
+measured 2.1x on ``doc_ppl``, OPTIMIZATION_r06.md). Both use the
+Iterator form so model/regex state is initialized once per executor
+Python worker and reused across Arrow batches ("model broadcast once per
+executor, no per-row Python" — BASELINE.json north_star).
 
-All per-row semantics are imported from ``textcore``/``lm``/``kernel`` —
-the same modules the test oracle uses — so Spark output is
-byte-identical to the oracle by construction.
+All per-row semantics are imported from ``lm``/``kernel`` — the same
+modules the test oracle uses — so Spark output is byte-identical to the
+oracle by construction.
 """
 
 from __future__ import annotations
@@ -24,83 +26,7 @@ import pyarrow as pa
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from . import textcore
 from .lm import get_model
-
-ANNOTATE_SCHEMA = T.StructType([
-    T.StructField("text_extracted", T.StringType()),
-    T.StructField("lang_pred", T.StringType()),
-    T.StructField("lang_conf", T.DoubleType()),
-    T.StructField("ppl", T.DoubleType()),
-    T.StructField("top_bigram_share", T.DoubleType()),
-])
-
-SCRUB_SCHEMA = T.StructType([
-    T.StructField("scrubbed_text", T.StringType()),
-    T.StructField("pii_email", T.IntegerType()),
-    T.StructField("pii_ip", T.IntegerType()),
-    T.StructField("pii_phone", T.IntegerType()),
-    T.StructField("toxicity_slur", T.IntegerType()),
-])
-
-
-@F.pandas_udf(ANNOTATE_SCHEMA)
-def annotate_udf(
-    batches: Iterator[tuple[pd.Series, pd.Series]],
-) -> Iterator[pd.DataFrame]:
-    """(html, text) -> (text_extracted, lang_pred, lang_conf, ppl, top_bigram_share).
-
-    Fuses extraction + langid + perplexity + repetition into a single
-    ArrowEvalPython node — one boundary crossing instead of three.
-    Extraction precedence: html when present, else the text column.
-    """
-    model = get_model()  # per-worker singleton, loaded once
-    for htmls, texts in batches:
-        rows = []
-        for b, t in zip(htmls, texts):
-            if b is not None:
-                txt = textcore.extract_text(bytes(b))
-            elif isinstance(t, str):
-                txt = t
-            else:
-                txt = ""
-            toks = textcore.tokenize(txt)  # shared by all three kernels
-            lang, conf = textcore.lang_id(txt, toks)
-            rows.append((
-                txt, lang, conf, model.perplexity(txt, toks),
-                textcore.top_bigram_share(txt, toks),
-            ))
-        yield pd.DataFrame(
-            rows,
-            columns=[
-                "text_extracted", "lang_pred", "lang_conf", "ppl",
-                "top_bigram_share",
-            ],
-        )
-
-
-@F.pandas_udf(SCRUB_SCHEMA)
-def scrub_udf(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-    """text -> (scrubbed_text, per-rule match counts)."""
-    for texts in batches:
-        rows = []
-        for t in texts:
-            if not isinstance(t, str):
-                rows.append(("", 0, 0, 0, 0))
-                continue
-            out, c = textcore.scrub_text(t)
-            rows.append((
-                out, c["pii_email"], c["pii_ip"], c["pii_phone"],
-                c["toxicity_slur"],
-            ))
-        yield pd.DataFrame(
-            rows,
-            columns=[
-                "scrubbed_text", "pii_email", "pii_ip", "pii_phone",
-                "toxicity_slur",
-            ],
-        )
-
 
 ENRICH_SCHEMA = T.StructType([
     T.StructField("lang_pred", T.StringType()),
@@ -152,17 +78,10 @@ def enrich_udf(
         yield enrich_batch_arrow(htmls, texts)
 
 
-@F.pandas_udf(T.StringType())
-def extract_text_udf(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-    """html binary -> extracted text (byte-stable; see textcore.extract_text)."""
-    for htmls in batches:
-        yield htmls.map(lambda b: textcore.extract_text(bytes(b)) if b is not None else "")
-
-
 @F.pandas_udf(T.DoubleType())
 def ppl_udf(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
     """text -> perplexity only (vectorized batch path, kernel.ppl_batch)
-    — bit-identical to ``annotate_udf(...).ppl`` on null html, without
+    — bit-identical to ``enrich_udf(...).ppl`` on null html, without
     paying for extraction/langid/scrub/top-bigram the caller discards
     (Catalyst cannot prune unused struct fields out of an opaque UDF)."""
     from .kernel import ppl_batch

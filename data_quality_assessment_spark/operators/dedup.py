@@ -5,20 +5,21 @@ Exact dedup and the duplicate-count metric reimagine the reference's D1-D3
 ``scripts/PreProcessing.py:85-94,217-224`` — SURVEY.md §2.3); the near-dup
 family is the web-scale extension (training-data pipeline requirement).
 
-Hashing convention: every hash is ``int64('0x' + md5(payload)[:15])`` —
-computable identically in Spark (``conv(substr(md5(x),1,15),16,10)``) and
-DuckDB (``('0x' || substr(md5(x),1,15))::BIGINT``), so every operator here
-has an exact SQL oracle. xxhash64 would be ~3x faster but is not
-reproducible outside Spark; swap ``_h64`` for ``F.xxhash64`` in production.
+Two hash families, chosen by ``fast``:
 
-Scale notes: fast-path MinHash signatures / SimHash are ONE Arrow-
-batched UDF node each (r6 — the vectorized numpy XXH64 twin in
-``functions/fasthash.py``, bit-identical to the former codegen HOF
-chains which were CodegenFallback-interpreted); the md5 oracle family
-stays pure codegen. No explode of shingles anywhere; the only shuffle
-is the band-key self-join, which AQE handles (skewed bands =
-near-identical boilerplate clusters; the band key is already
-high-cardinality).
+  * ``fast=False`` (parity): every hash is ``int64('0x' + md5(payload)[:15])``
+    — computable identically in Spark (``conv(substr(md5(x),1,15),16,10)``)
+    and DuckDB (``('0x' || substr(md5(x),1,15))::BIGINT``), so every
+    operator here has an exact SQL oracle; pure codegen.
+  * ``fast=True`` (production): XXH64 — one xxhash64 per shingle/word
+    plus universal hashing, run as ONE Arrow-batched UDF node per
+    operator by the vectorized numpy twin in ``functions/fasthash.py``
+    (bit-identical to Spark's ``xxhash64`` HOF chains, which are
+    CodegenFallback-interpreted; pinned by tests/test_fasthash.py).
+
+Scale notes: no explode of shingles anywhere; the only shuffle is the
+band-key self-join, which AQE handles (skewed bands = near-identical
+boilerplate clusters; the band key is already high-cardinality).
 """
 
 from __future__ import annotations
@@ -35,9 +36,8 @@ from ..functions import textstats as ts
 N_HASHES = 16
 BAND_SIZE = 2
 N_BANDS = N_HASHES // BAND_SIZE
-SHINGLE_K = 3
+SHINGLE_K = 3  # fasthash.minhash_sigs_batch (the fast path) hardcodes k=3
 SIMHASH_BITS = 32
-SIMHASH_CHUNKS = 4
 
 
 def _h64(payload: Column) -> Column:
@@ -46,13 +46,10 @@ def _h64(payload: Column) -> Column:
 
 
 # ---------------------------------------------------------------------------
-# fast hash family for the production path: one xxhash64 per shingle +
-# universal hashing (a*h + b mod p) for the remaining minhashes — integer
-# ops only, ~20x cheaper than per-hash md5 string math. p = 2^31-1 keeps
-# a*h < 2^62 so ANSI-mode multiplication cannot overflow.
+# fast (XXH64) family: one xxhash64 per shingle + universal hashing
+# (a*h + b mod 2^31-1, see fasthash.minhash_sigs_batch) for the remaining
+# minhashes — integer ops only, ~20x cheaper than per-hash md5 string math
 # ---------------------------------------------------------------------------
-
-_P31 = (1 << 31) - 1
 
 
 def _uh_params(i: int, tag: str) -> tuple[int, int]:
@@ -153,37 +150,6 @@ def _shingles(text: Column, k: int = SHINGLE_K) -> Column:
     ).otherwise(F.array(F.concat_ws(" ", ws)))
 
 
-def minhash_signature(
-    text: Column, n_hashes: int = N_HASHES, fast: bool = True
-) -> Column:
-    """Array of n_hashes min-hashes over the shingle set — all codegen.
-
-    fast=True (production): one xxhash64 per shingle, then universal
-    hashing for the n variants. fast=False (parity): md5-based ``_h64``
-    per (shingle, i) — byte-reproducible in DuckDB for the oracle check,
-    ~20x more expensive.
-    """
-    sh = _shingles(text)
-    if not fast:
-        return F.array(*[
-            F.array_min(
-                F.transform(sh, lambda s: _h64(F.concat(s, F.lit(f"#{i}"))))
-            )
-            for i in range(n_hashes)
-        ])
-    base = F.transform(sh, lambda s: F.pmod(F.xxhash64(s), F.lit(_P31)))
-
-    def _mk(a: int, b: int):
-        # closure factory: pyspark HOF lambdas must be unary
-        return lambda h: F.pmod(h * a + b, F.lit(_P31))
-
-    mins = []
-    for i in range(n_hashes):
-        a, b = _uh_params(i, "mh")
-        mins.append(F.array_min(F.transform(base, _mk(a, b))))
-    return F.array(*mins)
-
-
 _FAST_SIG_UDFS: dict = {}
 
 
@@ -251,26 +217,13 @@ def with_minhash_signature(
     md5 path: materialize the shingle array once between projections
     so no HOF re-evaluates its argument subtree.
     """
-    if fast and SHINGLE_K == 3:
+    if fast:
         return df.select(
             F.col(id_col),
             _minhash_fast_udf(n_hashes)(F.col(text_col)).alias("sig"),
         )
-    sh = _shingles(F.col(text_col))
-    if fast:  # pragma: no cover — non-default shingle width
-        base = F.transform(sh, lambda s: F.pmod(F.xxhash64(s), F.lit(_P31)))
-
-        def _mk(a: int, b: int):
-            return lambda h: F.pmod(h * a + b, F.lit(_P31))
-
-        d = df.select(F.col(id_col), base.alias("_base"))
-        mins = []
-        for i in range(n_hashes):
-            a, b = _uh_params(i, "mh")
-            mins.append(F.array_min(F.transform(F.col("_base"), _mk(a, b))))
-        return d.select(id_col, F.array(*mins).alias("sig"))
     # parity (md5) path: per-(shingle, i) hashes — materialize shingles once
-    d = df.select(F.col(id_col), sh.alias("_sh"))
+    d = df.select(F.col(id_col), _shingles(F.col(text_col)).alias("_sh"))
 
     def _mk_md5(i: int):
         return lambda s: _h64(F.concat(s, F.lit(f"#{i}")))
@@ -349,31 +302,6 @@ def minhash_candidates(
 # ---------------------------------------------------------------------------
 
 
-def simhash(text: Column, bits: int = SIMHASH_BITS, fast: bool = True) -> Column:
-    """Per-doc SimHash over word hashes (one occurrence = one vote).
-
-    One hash per word, then ``bits`` cheap array passes for the bit votes —
-    no explode, no shuffle; stays in codegen. fast=False switches to the
-    md5 hash family for the cross-engine oracle check.
-    """
-    if fast:
-        hashes = F.transform(ts.words(text), lambda w: F.xxhash64(w))
-    else:
-        hashes = F.transform(ts.words(text), lambda w: _h64(w))
-
-    def _vote(j: int) -> Column:
-        return F.aggregate(
-            hashes,
-            F.lit(0).cast("long"),
-            lambda a, h: a + (F.shiftright(h, j).bitwiseAND(F.lit(1)) * 2 - 1),
-        )
-
-    acc = F.lit(0).cast("long")
-    for j in range(bits):
-        acc = acc + F.when(_vote(j) > 0, F.lit(2 ** j).cast("long")).otherwise(F.lit(0))
-    return acc
-
-
 def with_simhash(
     df: DataFrame,
     id_col: str,
@@ -393,8 +321,7 @@ def with_simhash(
             _simhash_fast_udf(bits)(F.col(text_col)).alias("simhash"),
         )
     ws = ts.words(F.col(text_col))
-    hasher = (lambda w: F.xxhash64(w)) if fast else (lambda w: _h64(w))
-    d = df.select(F.col(id_col), F.transform(ws, hasher).alias("_h"))
+    d = df.select(F.col(id_col), F.transform(ws, _h64).alias("_h"))
 
     def _vote(j: int) -> Column:
         return F.aggregate(
@@ -409,25 +336,6 @@ def with_simhash(
             F.lit(0)
         )
     return d.select(id_col, acc.alias("simhash"))
-
-
-def simhash_chunks(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """(id, simhash, chunk_idx, chunk_val) — hamming<=chunks-1 candidates
-    share at least one chunk (pigeonhole)."""
-    d = with_simhash(df, id_col, text_col)
-    width = SIMHASH_BITS // SIMHASH_CHUNKS
-    chunks = F.array(*[
-        F.struct(
-            F.lit(i).alias("chunk_idx"),
-            F.shiftright(F.col("simhash"), i * width)
-            .bitwiseAND(F.lit((1 << width) - 1))
-            .alias("chunk_val"),
-        )
-        for i in range(SIMHASH_CHUNKS)
-    ])
-    return d.select(id_col, "simhash", F.explode(chunks).alias("c")).select(
-        id_col, "simhash", "c.chunk_idx", "c.chunk_val"
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -24,7 +24,6 @@ from pyspark.sql import functions as F
 
 from ..config import PipelineConfig, DEFAULT_CONFIG
 from ..functions import textstats as ts
-from ..functions.udfs import annotate_udf, scrub_udf
 
 # ---------------------------------------------------------------------------
 # deterministic dedup (reference D2, SURVEY.md §2.3 — keep-first with a
@@ -114,7 +113,6 @@ DROP_RULE_IDS = [
     "mean_wl_high", "symbol_ratio", "stopword_frac", "dup_line",
     "top_bigram", "lang", "ppl_high", "slur",
 ]
-FLAG_RULE_IDS = ["lang_mismatch", "pii_email", "pii_ip", "pii_phone"]
 
 
 def _fired_array(rules: list[tuple[str, Column]]) -> Column:
@@ -160,20 +158,15 @@ def annotate(df: DataFrame, *, with_host: bool = True) -> DataFrame:
     return df
 
 
-def scrub(df: DataFrame) -> DataFrame:
-    """No-op since the scrub fused into the enrich UDF (kept so callers
-    and the resumable plan read as annotate -> scrub -> verdict); the
-    standalone ``scrub_udf`` remains for scrubbing arbitrary columns."""
-    return df
-
-
 def extracted_text_col() -> Column:
     """Native (whole-stage-codegen) twin of ``textcore.extract_text``:
     decode html then strip tags, else the text column. Identical bytes
     for valid UTF-8 input (the fixture/Common-Crawl-WET contract);
     malformed byte sequences may differ in U+FFFD count between the JVM
-    and Python decoders — callers needing that edge exact use
-    ``extract_text_udf``."""
+    and Python decoders. Every field the DAG derives from the text comes
+    from the enrich kernel (``kernel.enrich_batch_arrow``), which takes
+    the per-row ``textcore.extract_text`` path on invalid UTF-8, so only
+    text re-materialized through this twin can differ on that edge."""
     return F.when(
         F.col("html").isNotNull(),
         F.regexp_replace(F.decode(F.col("html"), "UTF-8"), "<[^>]*>", ""),
@@ -255,7 +248,7 @@ def run_pipeline(
         df = df.withColumn("host", ts.host_of(F.col("url")))
     else:
         df = annotate(df)
-    return verdict(scrub(df), cfg)
+    return verdict(df, cfg)
 
 
 def host_cadence(

@@ -31,17 +31,6 @@ from pyspark.sql import functions as F
 from ..operators import cadence
 
 
-def with_reference_iat(df: DataFrame, entity: str, ts: str) -> DataFrame:
-    """Q1 parity: lag over the GLOBAL (entity, ts) order."""
-    return cadence.with_iat(df, entity, ts, global_order=True)
-
-
-def dupe_score(df: DataFrame, keys: list[str]) -> DataFrame:
-    from ..operators.dedup import dup_count_metric
-
-    return dup_count_metric(df, keys).select("dupe_score")
-
-
 def six_metric_report(
     df: DataFrame,
     entity: str = "entity_id",

@@ -82,12 +82,6 @@ def iter_warc_records(fobj) -> Iterator[dict]:
         yield {"headers": headers, "block": block}
 
 
-def parse_warc_records(buf: bytes) -> list[dict]:
-    """All records in one in-memory WARC buffer (fixture/test helper —
-    production paths stream via :func:`iter_warc_records`)."""
-    return list(iter_warc_records(io.BytesIO(buf)))
-
-
 def _parse_http_response(block: bytes) -> tuple[int | None, str | None, bytes]:
     """(status, content-type, body) from an HTTP response block; a
     block that is not HTTP comes back as (None, None, block)."""

@@ -46,9 +46,7 @@ def streaming_pipeline(
     if dedup:
         stream = stream.withWatermark("warc_ts", watermark)
         stream = stream.dropDuplicatesWithinWatermark(["url", "warc_ts"])
-    out = pipeline.verdict(
-        pipeline.scrub(pipeline.annotate(stream)), cfg
-    )
+    out = pipeline.verdict(pipeline.annotate(stream), cfg)
     return out.select(*pipeline.OUTPUT_COLUMNS)
 
 

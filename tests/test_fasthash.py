@@ -9,9 +9,10 @@ import string
 import pytest
 from pyspark.sql import functions as F
 
+from data_quality_assessment_spark.functions.fasthash import _P31
 from data_quality_assessment_spark.operators import dedup
 from data_quality_assessment_spark.operators.dedup import (
-    _P31, _shingles, _uh_params, N_HASHES, SIMHASH_BITS,
+    _shingles, _uh_params, N_HASHES, SIMHASH_BITS,
 )
 
 EDGE_TEXTS = [
