@@ -95,6 +95,47 @@ def _join_stat(
     return df.crossJoin(F.broadcast(stat))
 
 
+def iat_freq_scores(freq: DataFrame, group: list[str]) -> DataFrame:
+    """Mode, MAD, regularity (A8) and outlier score (A7) from a
+    ``(group…, iat, _c)`` frequency table of CLEAN IATs. Returns
+    ``[group…,] mode, mad, regularity, outliers``, unrounded.
+
+    Every score depends only on the distinct iat value and its count,
+    so each is a frequency-weighted aggregate over the collapsed table:
+    mode is the ``min(struct(-count, iat))`` pick (ties -> smallest,
+    Q3); MAD is ``percentile(|iat - mode|, 0.5, count)`` — the same
+    Percentile aggregate ``F.median`` runs over the expanded rows;
+    regularity and the outlier share are weighted sums. Regularity is
+    NULL when the mode is 0 (no defined relative error); a group with
+    no clean IAT has no row (``group=[]``: one row of NULLs).
+    Row-level references: :func:`regularity_score` /
+    :func:`outlier_score`.
+    """
+    pick = F.min(F.struct((-F.col("_c")).alias("nc"), F.col("iat").alias("v")))
+    mode = freq.groupBy(*group).agg(pick["v"].alias("mode"))
+    dev = F.abs(F.col("iat") - F.col("mode"))
+    # mode rides along with MAD, so the last pass joins ONE stat row
+    stat = _join_stat(freq, mode, group).groupBy(*group).agg(
+        F.first("mode").alias("mode"),
+        F.percentile(dev, F.lit(0.5), F.col("_c")).alias("mad"),
+    )
+    j = _join_stat(freq, stat, group)
+    c = F.col("_c").cast("double")
+    rae = F.try_divide(dev, F.col("mode"))  # NULL when mode == 0
+    modz = F.try_divide(0.6745 * (F.col("iat") - F.col("mode")), F.col("mad"))
+    good = F.sum(F.when(rae <= 0.5, c * (1 - 2 * rae)).otherwise(F.lit(0.0)))
+    cnt = F.sum(F.when(rae <= 0.5, c).otherwise(F.lit(0.0)))
+    bad = F.sum(F.when(rae > 0.5, c * (2 * rae)).otherwise(F.lit(0.0)))
+    # one-sided mod-z > 3.5 (Q4); NULL modz (mad == 0) is no outlier
+    nout = F.sum(F.when((F.col("mad") > 0) & (modz > 3.5), c).otherwise(F.lit(0.0)))
+    return j.groupBy(*group).agg(
+        F.first("mode").alias("mode"),
+        F.first("mad").alias("mad"),
+        F.try_divide(good, cnt + bad).alias("regularity"),
+        (1 - nout / F.sum(c)).alias("outliers"),
+    )
+
+
 def regularity_score(
     df: DataFrame, iat_col: str = "iat", group: list[str] | None = None
 ) -> DataFrame:

@@ -57,18 +57,6 @@ def salted_distinct_count(
     )
 
 
-def hot_keys(
-    df: DataFrame, key: str, threshold: int
-) -> DataFrame:
-    """Keys whose row count exceeds ``threshold`` (one cheap pre-pass;
-    partial agg makes it skew-safe by construction)."""
-    return (
-        df.groupBy(key)
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") > threshold)
-    )
-
-
 def salted_repartition(
     df: DataFrame, key: str, num_partitions: int, buckets: int = 16,
     salt_cols: list[str] | None = None,

@@ -251,9 +251,7 @@ def run_pipeline(
     return verdict(df, cfg)
 
 
-def host_cadence(
-    pages: DataFrame, hot_threshold: int | None = None
-) -> DataFrame:
+def host_cadence(pages: DataFrame) -> DataFrame:
     """Per-host crawl-cadence stats over warc_ts (north_star: the
     reference's IAT regularity/outlier math per url-host group).
 
@@ -276,30 +274,14 @@ def host_cadence(
 
     The ONE-exchange window plan has a skew ceiling: window aggregates
     have no map-side collapse, so a mega-host (one host holding half
-    the crawl) lands on a single task. ``hot_threshold`` routes hosts
-    with more than that many pages through
-    :func:`host_cadence_salted` — the aggregation-shaped twin whose
-    every big-table operator partial-aggregates or bucket-partitions —
-    and unions the results; None (default, the oracle-checked path)
-    keeps the single-plan shape.
+    the crawl) lands on a single task. :func:`host_cadence_salted` is
+    the aggregation-shaped twin for such corpora.
     """
-    from pyspark.sql import Window
-
     from ..functions import textstats as ts
-    from ..operators import cadence
 
     d = pages.select(
         ts.host_of(F.col("url")).alias("host"), F.col("warc_ts")
     ).filter(F.col("warc_ts").isNotNull())
-    if hot_threshold is not None:
-        from ..operators.skew import hot_keys
-
-        hot = hot_keys(d, "host", hot_threshold).select("host")
-        cold = d.join(hot, "host", "left_anti")
-        hotrows = d.join(hot, "host", "left_semi")
-        return _host_cadence_fused(cold).unionByName(
-            _host_cadence_agg(hotrows)
-        )
     return _host_cadence_fused(d)
 
 
@@ -392,20 +374,16 @@ def _host_cadence_agg(d: DataFrame, ts_bucket_sec: int = 86400) -> DataFrame:
         spread over its crawl-duration/bucket buckets; bucket-boundary
         rows diff against the previous bucket's max via a per-bucket
         bounds table (rows per host = #buckets, tiny);
-      * mode: groupBy(host, iat) counts (map-side partial) then a
-        per-distinct-iat reduction;
-      * MAD: exact weighted median over the (host, |iat-mode|)
-        frequency table — cumulative-count interpolation identical to
-        ``F.percentile(.., 0.5)`` — windows only over collapsed
-        frequency rows;
-      * regularity / outlier sums: join mode+mad back (AQE skew-split
-        or auto-broadcast; the stats table is one row per host) and
-        partial-aggregate.
+      * mode, MAD, regularity and outliers: ``groupBy(host, iat)``
+        counts (map-side partial) feed ``cadence.iat_freq_scores`` —
+        every later stage reads only the frequency-collapsed rows.
 
     Every big-table stage either partial-aggregates map-side or
     partitions on (host, bucket); only per-host-small tables see
     host-wide windows."""
     from pyspark.sql import Window
+
+    from ..operators import cadence
 
     width = F.lit(int(ts_bucket_sec) * 1_000_000)
     micros = F.unix_micros(F.col("warc_ts").cast("timestamp"))
@@ -424,76 +402,19 @@ def _host_cadence_agg(d: DataFrame, ts_bucket_sec: int = 86400) -> DataFrame:
     x = x.join(bounds, ["host", "_bkt"])
     prev = F.coalesce(F.col("_prev"), F.col("_prev_last"))
     iat_raw = (F.col("_us") - prev) / F.lit(1_000_000.0)
-    rows = x.select(
-        "host", F.when(iat_raw >= 0, iat_raw).alias("iat")
+    freq = (
+        x.select("host", F.when(iat_raw >= 0, iat_raw).alias("iat"))
+        .filter(F.col("iat").isNotNull())
+        .groupBy("host", "iat")
+        .agg(F.count(F.lit(1)).alias("_c"))
     )
-
+    scores = cadence.iat_freq_scores(freq, ["host"])
     npages = d.groupBy("host").agg(F.count(F.lit(1)).alias("n_pages"))
-    clean = rows.filter(F.col("iat").isNotNull())
-    freq = clean.groupBy("host", "iat").agg(F.count(F.lit(1)).alias("_cnt"))
-    mode = freq.groupBy("host").agg(
-        F.min(
-            F.struct((-F.col("_cnt")).alias("nc"), F.col("iat").alias("v"))
-        )["v"].alias("_mode")
-    )
-    # exact weighted median of |iat - mode| (the F.percentile(0.5)
-    # interpolation over the frequency-collapsed rows)
-    fr = freq.join(mode, "host").withColumn(
-        "_dev", F.abs(F.col("iat") - F.col("_mode"))
-    )
-    w_dev = (
-        Window.partitionBy("host").orderBy("_dev")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    fr = fr.withColumn("_cum", F.sum("_cnt").over(w_dev)).withColumn(
-        "_tot", F.sum("_cnt").over(Window.partitionBy("host"))
-    )
-    pos = (F.col("_tot") - 1) / 2  # 0-based middle position (double)
-    mad = fr.groupBy("host").agg(
-        F.min(
-            F.when(F.col("_cum") >= F.floor(pos) + 1, F.col("_dev"))
-        ).alias("_lo"),
-        F.min(
-            F.when(F.col("_cum") >= F.ceil(pos) + 1, F.col("_dev"))
-        ).alias("_hi"),
-        (F.first(pos) - F.floor(F.first(pos))).alias("_frac"),
-    ).select(
-        "host",
-        (F.col("_lo")
-         + (F.col("_hi") - F.col("_lo")) * F.col("_frac")).alias("_mad"),
-    )
-    stats = mode.join(mad, "host")
-
-    j = clean.join(stats, "host")
-    rae = F.try_divide(F.abs(F.col("iat") - F.col("_mode")), F.col("_mode"))
-    modz = F.try_divide(
-        0.6745 * (F.col("iat") - F.col("_mode")), F.col("_mad")
-    )
-    is_out = F.when((F.col("_mad") > 0) & (modz > 3.5), F.lit(1.0)).otherwise(
-        F.lit(0.0)
-    )
-    agg = j.groupBy("host").agg(
-        F.first("_mode").alias("_m"),
-        F.sum(F.when((F.col("_mode") != 0) & (rae <= 0.5),
-                     1 - 2 * rae).otherwise(F.lit(0.0))).alias("_good"),
-        F.sum(F.when((F.col("_mode") != 0) & (rae <= 0.5),
-                     F.lit(1.0)).otherwise(F.lit(0.0))).alias("_cntr"),
-        F.sum(F.when((F.col("_mode") != 0) & (rae > 0.5),
-                     2 * rae).otherwise(F.lit(0.0))).alias("_bad"),
-        F.sum(is_out).alias("_nout"),
-        F.count(F.lit(1)).alias("_nclean"),
-    )
-    return npages.join(agg, "host", "left").select(
+    return npages.join(scores, "host", "left").select(
         "host",
         "n_pages",
-        F.when(
-            F.col("_m").isNotNull() & (F.col("_m") != 0),
-            F.round(F.col("_good") / (F.col("_cntr") + F.col("_bad")), 6),
-        ).alias("reg_score"),
-        F.when(
-            F.col("_nclean") > 0,
-            F.round(1 - F.col("_nout") / F.col("_nclean"), 6),
-        ).alias("out_score"),
+        F.round("regularity", 6).alias("reg_score"),
+        F.round("outliers", 6).alias("out_score"),
     )
 
 

@@ -25,7 +25,7 @@ Parity notes (each cites the reference line and the quirk):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators import cadence
@@ -52,27 +52,22 @@ def six_metric_report(
     keep/drop F1 rather than equality), so the plan has no
     single-partition WindowExec and holds at any cardinality.
 
-    r6 plan restructure (results bit-identical, pinned by
-    tests/test_report_equiv.py against the pre-r6 composition):
+    Plan shape (results pinned by tests/test_report_equiv.py against
+    the row-level composition over ``cadence.regularity_score`` /
+    ``outlier_score``):
 
       * dupe + format/unknown/completeness fuse into ONE pass over the
         raw frame — all four are integer counts, so re-grouping the
         sums through the dupe metric's (entity, ts) aggregate is exact;
-      * the dedup->IAT subtree (scan + two windows + a per-row
-        md5(to_json) tiebreak) used to be re-executed ~5x — once per
-        reference through regularity_score / outlier_score. Mode, MAD
-        and the outlier count now all derive from ONE
-        ``groupBy(iat).count()`` frequency pass: mode is the same
-        min-struct pick, MAD is the exact weighted median (the
-        cumulative-count interpolation identical to ``F.median``, the
-        formula already driver-verified in ``_host_cadence_agg``), and
-        the outlier numerator/denominator are INTEGER sums of
-        frequencies (the per-row modified-z test depends only on the
-        distinct iat value). Only the regularity sums are
-        order-sensitive float additions, so they keep their original
-        per-row aggregate shape — the one remaining row pass. The
-        subtree now executes 2x instead of ~5x and the plan drops from
-        20 exchanges to 11.
+      * dedup is pass A's (entity, ts) grouping itself: the IAT reads
+        no other column, so the lag runs over those distinct groups
+        (no row_number window, no per-row tiebreak);
+      * the IAT subtree (scan + aggregate + the lag window) feeds ONE
+        ``groupBy(iat).count()`` frequency table, and
+        ``cadence.iat_freq_scores`` derives mode, MAD, regularity and
+        outliers from it. Every later reference reads that table's
+        shuffle (a reused exchange), so the subtree runs once with no
+        materialization — pinned by tests/test_plan_shape.py.
     """
     required = required or [entity, ts, "payload_str", "payload_num"]
     known = known or required
@@ -116,75 +111,31 @@ def six_metric_report(
         ).alias("completeness"),
     )
 
-    # --- dedup then IAT (global order, Q1). Winner within a (entity, ts)
-    # group is interchangeable for the IAT metrics, but the tiebreak must
-    # be DETERMINISTIC across runs/repartitionings (D2) — md5 of the full
-    # row content, never monotonically_increasing_id.
-    tiebreak = F.md5(F.to_json(F.struct(*[F.col(c) for c in df.columns])))
-    w = Window.partitionBy(entity, "_ts").orderBy(tiebreak)
-    dd = d.withColumn("_rn", F.row_number().over(w)).filter("_rn = 1").drop("_rn")
-    iat = cadence.with_iat(dd, entity, "_ts", global_order=global_order)
+    # --- dedup then IAT (global order, Q1). The IAT reads only (entity,
+    # ts), so the deduplicated rows' IATs are those of per_key's distinct
+    # (entity, ts) groups: no winner to pick, so nothing to tiebreak (D2).
+    iat = cadence.with_iat(
+        per_key.select(entity, "_ts"), entity, "_ts", global_order=global_order
+    )
     clean = iat.filter(F.col("iat").isNotNull()).select("iat")
 
-    # --- PASS B: iat frequency table -> mode, MAD, outlier counts.
-    # MAD = percentile(dev, 0.5, frequency) — the SAME Percentile
-    # aggregate F.median runs over the expanded rows (its buffer counts
-    # values; seeding the counts with the frequencies is identical),
-    # with map-side partials and no global sort or window.
-    freq = clean.groupBy("iat").agg(F.count(F.lit(1)).alias("_c"))
-    # freq is referenced by mode/stats/outlier AND (via mode) the
-    # regularity pass; without materialization each reference re-runs
-    # the scan + dedup window + IAT window + per-row md5 subtree that
-    # derives it. The table is frequency-collapsed (one row per
-    # distinct IAT) — lazily checkpoint it so the subtree executes
-    # once per report evaluation (recomputed on every invocation; this
-    # is intra-query materialization, not cross-run caching).
-    freq = freq.localCheckpoint(eager=False)
-    mode_row = freq.agg(
-        F.min(
-            F.struct((-F.col("_c")).alias("nc"), F.col("iat").alias("v"))
-        )["v"].alias("mode")
+    # --- PASS B: every IAT score from ONE frequency table (mode, MAD,
+    # regularity and outliers each depend only on the distinct iat value
+    # and its count); rounded 6dp then 3dp like the reference (Q8).
+    # repartition("iat") is free in scale mode (the aggregate's own
+    # exchange already satisfies it); in parity mode the aggregate runs
+    # above the global lag's single partition, and this exchange is what
+    # the kernel's three references reuse instead of re-running the lag.
+    freq = (
+        clean.groupBy("iat").agg(F.count(F.lit(1)).alias("_c"))
+        .repartition("iat")
     )
-    fr = freq.crossJoin(F.broadcast(mode_row)).withColumn(
-        "_dev", F.abs(F.col("iat") - F.col("mode"))
-    )
-    stats_row = fr.agg(
-        F.percentile(F.col("_dev"), F.lit(0.5), F.col("_c")).alias("mad"),
-        F.sum("_c").alias("_n"),
-    )
-    # one-sided mod-z > 3.5 (Q4): the test depends only on the distinct
-    # iat value, so the outlier count is an exact integer sum of
-    # frequencies; denominator is the clean row count (same as before)
-    modz_num = 0.6745 * (F.col("iat") - F.col("mode"))
-    out_row = fr.crossJoin(F.broadcast(stats_row)).agg(
-        F.sum(
-            F.when(
-                (F.col("mad") > 0)
-                & (F.try_divide(modz_num, F.col("mad")) > 3.5),
-                F.col("_c").cast("double"),
-            ).otherwise(F.lit(0.0))
-        ).alias("_nout"),
-        F.first(F.col("_n")).alias("_n"),
-    )
-    out_df = out_row.select(
-        F.round(
-            F.round(F.lit(1) - F.col("_nout") / F.col("_n"), 6), 3
-        ).alias("outliers")
+    scores = cadence.iat_freq_scores(freq, []).select(
+        F.round(F.round("regularity", 6), 3).alias("regularity"),
+        F.round(F.round("outliers", 6), 3).alias("outliers"),
     )
 
-    # --- regularity: order-sensitive float sums — keep the original
-    # per-row aggregate shape (same rows, same terms, same rounding)
-    m = mode_row.filter(F.col("mode") != 0)
-    j = clean.crossJoin(F.broadcast(m))
-    rae = F.abs(F.col("iat") - F.col("mode")) / F.col("mode")
-    good = F.sum(F.when(rae <= 0.5, 1 - 2 * rae).otherwise(F.lit(0.0)))
-    cnt = F.sum(F.when(rae <= 0.5, F.lit(1.0)).otherwise(F.lit(0.0)))
-    bad = F.sum(F.when(rae > 0.5, 2 * rae).otherwise(F.lit(0.0)))
-    reg_df = j.agg(
-        F.round(F.round(good / (cnt + bad), 6), 3).alias("regularity")
-    )
-
-    row = base_df.crossJoin(reg_df).crossJoin(out_df)
+    row = base_df.crossJoin(scores)
     avg = F.round(
         (
             F.col("dupe") + F.col("regularity") + F.col("outliers")

@@ -86,9 +86,11 @@ def main(argv: list[str] | None = None) -> int:
     out = pages_out(res_df)
     out.write.mode("overwrite").parquet(args.output + "/pages_out")
 
-    res = spark.read.parquet(args.output + "/pages_out")
-    n = res.count()
-    kept = res.filter("keep").count()
+    from pyspark.sql import functions as F
+
+    n, kept = spark.read.parquet(args.output + "/pages_out").agg(
+        F.count(F.lit(1)), F.coalesce(F.sum(F.col("keep").cast("long")), F.lit(0))
+    ).first()
     dt = time.time() - t0
     summary = {
         "n_docs": n,

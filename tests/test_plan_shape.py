@@ -147,6 +147,36 @@ def test_scale_mode_six_metric_has_no_global_window(spark, pages_path):
     assert scale.count() == 1
 
 
+@pytest.mark.parametrize("global_order", [True, False])
+def test_six_metric_report_subtree_runs_once(spark, pages_path, global_order):
+    """Every IAT score derives from ONE frequency table whose exchange
+    the later references reuse: the final AQE plan holds the IAT lag
+    Window exactly once, no row_number Window (dedup is the dupe
+    metric's (entity, ts) grouping) and no materialized-RDD scan (no
+    localCheckpoint) — in parity and scale mode alike."""
+    import re
+
+    from pyspark.sql import functions as F
+
+    from data_quality_assessment_spark.plans import report
+
+    df = spark.read.parquet(pages_path).select(
+        F.substring_index(F.substring_index("url", "://", -1), "/", 1)
+        .alias("entity_id"),
+        F.col("warc_ts").alias("observationDateTime"),
+    )
+    r = report.six_metric_report(
+        df, required=["entity_id", "observationDateTime"],
+        global_order=global_order,
+    )
+    r.collect()
+    final = _plan(r).split("== Initial Plan ==")[0]
+    assert "isFinalPlan=true" in final, final
+    assert "row_number" not in final, final
+    assert len(re.findall(r"\bWindow \[lag\(", final)) == 1, final
+    assert "ExistingRDD" not in final, final
+
+
 def test_join_stat_forced_broadcast_hint(spark, pages_path):
     """broadcast=True keeps the static hint for caller-known-small dims."""
     from data_quality_assessment_spark.operators import cadence

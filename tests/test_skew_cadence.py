@@ -24,13 +24,6 @@ def test_salted_distinct_count_exact(spark):
     assert got == {"hot": 13, "a": 4, "b": 1}
 
 
-def test_hot_keys(spark):
-    rows = [("hot", 1)] * 100 + [("cold", 1)] * 5
-    df = spark.createDataFrame(rows, "k string, v int")
-    got = [r.k for r in skew.hot_keys(df, "k", 50).collect()]
-    assert got == ["hot"]
-
-
 def test_salted_repartition_preserves_rows(spark):
     df = spark.range(1000).withColumn("k", F.lit("hot"))
     out = skew.salted_repartition(df, "k", 16, buckets=8)
@@ -203,18 +196,6 @@ def test_host_cadence_salted_equals_fused(spark):
     # and with a giant bucket (single bucket per host) as a degenerate
     # sanity case
     assert _rows_of(host_cadence_salted(pages, ts_bucket_sec=10**9)) == fused
-
-
-def test_host_cadence_hot_threshold_routing(spark):
-    """hot_threshold routes the mega-host through the salted plan and
-    everything else through the fused plan; the union equals the
-    unrouted result."""
-    from data_quality_assessment_spark.plans.pipeline import host_cadence
-
-    pages = _skewed_pages(spark)
-    assert _rows_of(host_cadence(pages, hot_threshold=100)) == _rows_of(
-        host_cadence(pages)
-    )
 
 
 def test_host_cadence_salted_no_hostwide_window_on_big_table(spark):
