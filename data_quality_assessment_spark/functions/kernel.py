@@ -5,15 +5,16 @@ text: extraction, language id, perplexity, repetition signals, PII scrub,
 and the heuristic text statistics. Shared across:
 
   * ``udfs.enrich_udf`` — the single ArrowEvalPython node of the flagship
-    pipeline (each Arrow batch -> ``enrich_batch``),
+    pipeline (each Arrow batch -> ``enrich_batch_arrow``),
   * the pandas test oracle (same functions, same floats — byte-identical
     by construction).
 
-Two implementations, pinned equal by tests/test_kernel_parity.py:
+Two implementations, pinned equal by tests/test_kernel_parity.py, and
+one rule choosing between them (``_vector_ok``):
 
   * ``_enrich_batch_scalar`` — the reference per-doc loop (the original
-    kernel). Still used for tiny batches, for the swapped-in real-model
-    paths (fastText / ARPA LM), and as the definition of record.
+    kernel). Used only for the swapped-in real-model paths (fastText /
+    ARPA LM), and as the definition of record.
   * ``_enrich_batch_vector`` — the batch-vectorized fast path (guide
     §4.2: hand whole Arrow batches to native code instead of looping
     rows). Tokenization, vocab-id lookup, script counting, perplexity
@@ -62,38 +63,29 @@ ENRICH_COLS = (
     "nw", "mean_wl", "symbol_ratio", "stopword_frac", "dup_line_frac",
 )
 
-# below this many rows the Arrow/numpy batch setup costs more than the
-# scalar loop; parity is unaffected (both paths are pinned equal)
-_VECTOR_MIN_ROWS = 16
+
+def _vector_ok(model, ft=None) -> bool:
+    """The one scalar-vs-vector rule, for every batch size: the vector
+    path scores from the frozen BigramLM's id API and runs the
+    heuristic langid, so a swapped-in real model (ARPA LM without
+    ``perplexity_ids``, or any fastText langid) takes the scalar loop."""
+    return ft is None and hasattr(model, "perplexity_ids")
 
 
 def enrich_batch(htmls, texts) -> dict[str, list]:
-    """Columnar enrich over parallel sequences of (html, text).
+    """Columnar enrich over parallel sequences of (html, text): a list
+    view of ``enrich_batch_arrow`` (same dispatch, same output).
 
     Extraction precedence: html when present, else the text column.
-    Returns {column: list-like} in ENRICH_COLS order, ready for
+    Returns {column: list} in ENRICH_COLS order, ready for
     ``pd.DataFrame`` without a row->column transpose.
     """
-    from .model_loaders import get_fasttext
+    import pyarrow as pa
 
-    model = get_model()  # per-worker singleton
-    ft = get_fasttext()
-    n = len(htmls)
-    if (
-        n < _VECTOR_MIN_ROWS
-        or ft is not None                      # real fastText: per-doc API
-        or not hasattr(model, "perplexity_ids")  # real ARPA LM: token API
-        # the vector path's lang finishing and byte-level script counter
-        # hardcode this exact script layout
-        or textcore.SCRIPT_RANGES != {
-            "xx_cyr": ((0x0400, 0x04FF),),
-            "xx_cjk": ((0x4E00, 0x9FFF), (0x3040, 0x30FF)),
-            "xx_deva": ((0x0900, 0x097F),),
-        }
-        or textcore._LATIN != ((0x41, 0x5A), (0x61, 0x7A))
-    ):
-        return _enrich_batch_scalar(htmls, texts, model, ft)
-    return _enrich_batch_vector(htmls, texts, model)
+    st = enrich_batch_arrow(
+        pa.array(htmls, type=pa.binary()), pa.array(texts, type=pa.string())
+    )
+    return {k: st.field(k).to_pylist() for k in ENRICH_COLS}
 
 
 # ---------------------------------------------------------------------------
@@ -176,32 +168,18 @@ _VEC = None  # lazy per-process constants (built on first vector batch)
 def _vector_consts():
     """Precomputed tables for the vector path (per-process, built once).
 
-    * cls_table: uint16 codepoint -> script class (0 none, 1 latin,
-      2.. = SCRIPT_RANGES in insertion order) for the BMP; all script
-      ranges live below U+10000, so higher codepoints are class 0.
     * gate_re: ASCII-case-exact combined scrub-gate regex — any '@',
       any ASCII digit, or any slur spelled with per-character case
       classes (RE2 ``(?i)`` would apply Unicode folding, which is NOT
       what ``str.lower``-gating does; the explicit classes are).
     """
-    import numpy as np
     import pyarrow as pa
 
-    cls_table = np.zeros(1 << 16, dtype=np.uint16)
-    for lo, hi in textcore._LATIN:
-        cls_table[lo:hi + 1] = 1
-    script_names = list(textcore.SCRIPT_RANGES)
-    for k, name in enumerate(script_names):
-        for lo, hi in textcore.SCRIPT_RANGES[name]:
-            cls_table[lo:hi + 1] = 2 + k
     gate_re = "[@0-9]|" + "|".join(
         "".join(f"[{c}{c.upper()}]" for c in s)
         for s in textcore.SLUR_LEXICON
     )
     return {
-        "cls_table": cls_table,
-        "n_cls": 2 + len(script_names),
-        "script_names": script_names,
         "gate_re": gate_re,
         "vocab": pa.array(textcore.VOCAB, type=pa.string()),
     }
@@ -341,10 +319,7 @@ def ppl_batch(texts, model=None) -> list[float]:
         model = get_model()
     txts = [t if isinstance(t, str) else "" for t in texts]
     n = len(txts)
-    if (
-        n < _VECTOR_MIN_ROWS
-        or not hasattr(model, "perplexity_ids")
-    ):
+    if not _vector_ok(model):
         return [
             model.perplexity(t, textcore.tokenize(t)) for t in txts
         ]
@@ -421,22 +396,15 @@ def _extract_arr(html_arr, text_arr):
 def enrich_batch_arrow(html_arr, text_arr):
     """Arrow-native enrich: (binary html array, string text array) ->
     pa.StructArray in ENRICH_COLS order — the ``arrow_udf`` entry (no
-    pandas on either side of the boundary). Falls back to the scalar
-    path (converted via to_pylist) for tiny batches, swapped-in models,
-    or non-UTF-8 html bytes."""
-    import pyarrow as pa
-
+    pandas on either side of the boundary) and the one enrich entry that
+    dispatches. Batches of every size take the vector path; html with
+    invalid UTF-8 bytes takes its per-row ``extract_text`` extraction;
+    swapped-in real models take the scalar loop (``_vector_ok``)."""
     from .model_loaders import get_fasttext
 
     model = get_model()
     ft = get_fasttext()
-    n = len(html_arr)
-    if (
-        n < _VECTOR_MIN_ROWS
-        or ft is not None
-        or not hasattr(model, "perplexity_ids")
-        or tuple(textcore.SCRIPT_RANGES) != ("xx_cyr", "xx_cjk", "xx_deva")
-    ):
+    if not _vector_ok(model, ft):
         cols = _enrich_batch_scalar(
             html_arr.to_pylist(), text_arr.to_pylist(), model, ft
         )
@@ -586,7 +554,7 @@ def _enrich_from_arr(arr, model) -> dict[str, list]:
     dup_line_l = dup_line_arr.tolist()
 
     # --- per-row text materialized ONLY where the scalar helpers run --
-    sel = np.flatnonzero(np.asarray(need_scrub) | ~dl_eligible)
+    sel = np.flatnonzero(np.asarray(need_scrub, dtype=bool) | ~dl_eligible)
     txt_by_i = (
         dict(zip(sel.tolist(), arr.take(pa.array(sel)).to_pylist()))
         if len(sel) else {}

@@ -106,16 +106,19 @@ def test_kernel_on_fixture_corpus():
 
 
 def _assert_batch_parity(htmls, texts):
+    """Scalar reference == the vector body and == the dispatching entry
+    (Arrow extraction included) for a batch of any size."""
     ref = kernel._enrich_batch_scalar(htmls, texts)
-    fast = kernel._enrich_batch_vector(
-        htmls, texts, get_model()
-    )
-    for k in kernel.ENRICH_COLS:
-        a, b = list(ref[k]), list(fast[k])
-        assert len(a) == len(b)
-        for i, (x, y) in enumerate(zip(a, b)):
-            ok = (x == y) or (x is None and y is None)
-            assert ok, (k, i, x, y, repr(texts[i])[:120])
+    for fast in (
+        kernel._enrich_batch_vector(htmls, texts, get_model()),
+        kernel.enrich_batch(htmls, texts),
+    ):
+        for k in kernel.ENRICH_COLS:
+            a, b = list(ref[k]), list(fast[k])
+            assert len(a) == len(b)
+            for i, (x, y) in enumerate(zip(a, b)):
+                ok = (x == y) or (x is None and y is None)
+                assert ok, (k, i, x, y, repr(texts[i])[:120])
 
 
 EDGE_TEXTS = [
@@ -151,8 +154,13 @@ EDGE_TEXTS = [
 
 
 def test_vector_batch_parity_edges():
-    texts = EDGE_TEXTS * 2  # 40 rows -> well past _VECTOR_MIN_ROWS
+    texts = EDGE_TEXTS * 2
     _assert_batch_parity([None] * len(texts), texts)
+    # every batch size takes the vector path: 1..20-row windows too
+    for w in range(1, 21):
+        for lo in range(0, len(EDGE_TEXTS), w):
+            win = EDGE_TEXTS[lo:lo + w]
+            _assert_batch_parity([None] * len(win), win)
 
 
 def test_vector_batch_parity_fixture():
@@ -175,20 +183,75 @@ def test_vector_batch_parity_html_rows():
 
 @pytest.mark.skipif(not HAVE_HYP, reason="hypothesis unavailable")
 @settings(max_examples=60, deadline=None)
-@given(st.lists(st.text(max_size=120), min_size=16, max_size=40))
+@given(st.lists(st.text(max_size=120), min_size=1, max_size=40))
 def test_vector_batch_parity_hypothesis(texts):
     _assert_batch_parity([None] * len(texts), texts)
+
+
+def test_default_models_take_vector_path():
+    """The shipped BigramLM without a fastText model dispatches to the
+    vector path; only swapped-in real models (test_model_loaders) take
+    the scalar loop."""
+    from data_quality_assessment_spark.functions.model_loaders import (
+        get_fasttext,
+    )
+
+    assert kernel._vector_ok(get_model(), get_fasttext())
+
+
+def test_empty_batch():
+    """0-row batches (empty partitions) return 0-length columns of the
+    struct types the UDF declares."""
+    import pyarrow as pa
+
+    want = kernel._cols_to_struct({k: [] for k in kernel.ENRICH_COLS})
+    out = kernel.enrich_batch_arrow(
+        pa.array([], type=pa.binary()), pa.array([], type=pa.string())
+    )
+    assert len(out) == 0 and out.type == want.type
+    cols = kernel.enrich_batch([], [])
+    assert list(cols) == list(kernel.ENRICH_COLS)
+    assert all(v == [] for v in cols.values())
+    assert kernel.ppl_batch([]) == []
+
+
+def test_script_counts_bytes_every_codepoint():
+    """The byte-level script counter hardcodes the UTF-8 byte patterns
+    of ``textcore._LATIN`` / ``SCRIPT_RANGES`` (and the vector lang
+    finishing loop their key names): over one row per non-surrogate
+    codepoint, each count must equal range membership, so a range edit
+    the counter does not follow fails here."""
+    import numpy as np
+    import pyarrow as pa
+
+    names = ("xx_cyr", "xx_cjk", "xx_deva")
+    assert tuple(textcore.SCRIPT_RANGES) == names
+    cps = np.concatenate((np.arange(0xD800), np.arange(0xE000, 0x110000)))
+    arr = pa.array([chr(c) for c in cps.tolist()], type=pa.string())
+    got = kernel._script_counts_bytes(arr)
+
+    def member(ranges):
+        m = np.zeros(len(cps), dtype=bool)
+        for lo, hi in ranges:
+            m |= (cps >= lo) & (cps <= hi)
+        return m.astype(np.int64)
+
+    want = [member(textcore._LATIN)]
+    want += [member(textcore.SCRIPT_RANGES[k]) for k in names]
+    for name, g, w in zip(("latin",) + names, got, want):
+        bad = np.flatnonzero(g != w)
+        assert not len(bad), (name, [hex(c) for c in cps[bad[:8]]])
 
 
 def test_ppl_batch_matches_perplexity():
     from data_quality_assessment_spark.functions.kernel import ppl_batch
 
-    texts = EDGE_TEXTS * 2
     m = get_model()
-    got = ppl_batch(texts, m)
-    for t, g in zip(texts, got):
-        txt = t if isinstance(t, str) else ""
-        assert g == m.perplexity(txt, textcore.tokenize(txt)), repr(t)
+    for texts in (EDGE_TEXTS * 2, EDGE_TEXTS[3:4], EDGE_TEXTS[:5]):
+        got = ppl_batch(texts, m)
+        for t, g in zip(texts, got):
+            txt = t if isinstance(t, str) else ""
+            assert g == m.perplexity(txt, textcore.tokenize(txt)), repr(t)
 
 
 def test_arrow_batch_parity():

@@ -2,9 +2,10 @@
 per doc_id with its DuckDB oracle ``ORACLE_LANGID`` — on the empty and
 null edges, on script-vote ties (the tie-break order is the part the SQL
 re-derives by hand), at the 0.30 script-share and 0.50 Latin-share
-thresholds, and through both kernel paths: the vectorized batch path
-(batches of >= ``kernel._VECTOR_MIN_ROWS`` rows) and the scalar loop
-(smaller batches)."""
+thresholds, and at every Arrow batch size (one batch, 15-row batches
+with a partial tail, 1-row batches). The scalar loop, which Spark no
+longer reaches with the shipped models, is pinned against the same
+oracle by a direct call."""
 
 from __future__ import annotations
 
@@ -12,7 +13,9 @@ import duckdb
 import pandas as pd
 import pytest
 
-from data_quality_assessment_spark.functions.kernel import _VECTOR_MIN_ROWS
+from data_quality_assessment_spark.functions.kernel import (
+    _enrich_batch_scalar,
+)
 from data_quality_assessment_spark.sources.fixture_gen import gen_pages_fast
 
 CYR, DEVA, CJK, KANA = "д", "द", "数", "カ"
@@ -48,7 +51,6 @@ CASES = [
 def _documents(tmp_path) -> pd.DataFrame:
     clean = list(gen_pages_fast(24, seed=5)["text"])
     texts = CASES + clean
-    assert len(texts) >= 2 * _VECTOR_MIN_ROWS
     pdf = pd.DataFrame({
         "doc_id": pd.Series(range(len(texts)), dtype="int64"),
         "text": pd.Series(texts, dtype="object"),
@@ -70,8 +72,18 @@ def _duck_langid(sf_dir) -> dict[int, str]:
     return dict(rows)
 
 
-# batch sizes: one vector-path batch, and scalar-path batches only
-@pytest.mark.parametrize("batch_rows", [10_000, _VECTOR_MIN_ROWS - 1])
+def _assert_matches(pdf, got, want):
+    assert set(got) == set(want) == set(pdf["doc_id"])
+    diff = {
+        i: (pdf["text"][i], got[i], want[i])
+        for i in want if got[i] != want[i]
+    }
+    assert not diff, diff
+    # the cases reach every label the oracle can emit
+    assert {"unk", "en", "xx_cyr", "xx_cjk", "xx_deva"} <= set(got.values())
+
+
+@pytest.mark.parametrize("batch_rows", [10_000, 15, 1])
 def test_q_langid_matches_duckdb_oracle(spark, tmp_path, batch_rows):
     import __spark_entry__ as entry
 
@@ -86,12 +98,13 @@ def test_q_langid_matches_duckdb_oracle(spark, tmp_path, batch_rows):
         }
     finally:
         spark.conf.set(key, prev)
-    want = _duck_langid(tmp_path)
-    assert set(got) == set(want) == set(pdf["doc_id"])
-    diff = {
-        i: (pdf["text"][i], got[i], want[i])
-        for i in want if got[i] != want[i]
-    }
-    assert not diff, diff
-    # the cases reach every label the oracle can emit
-    assert {"unk", "en", "xx_cyr", "xx_cjk", "xx_deva"} <= set(got.values())
+    _assert_matches(pdf, got, _duck_langid(tmp_path))
+
+
+def test_scalar_langid_matches_duckdb_oracle(tmp_path):
+    """The scalar reference loop (``textcore.lang_id`` per doc) on the
+    same cases, as ``q_langid`` feeds the kernel (null html)."""
+    pdf = _documents(tmp_path)
+    cols = _enrich_batch_scalar([None] * len(pdf), list(pdf["text"]))
+    got = dict(zip(pdf["doc_id"].tolist(), cols["lang_pred"]))
+    _assert_matches(pdf, got, _duck_langid(tmp_path))

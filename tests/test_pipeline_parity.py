@@ -15,19 +15,32 @@ from data_quality_assessment_spark.sources.fixture_gen import gen_pages
 from tests.oracle import oracle_pipeline
 
 
-@pytest.fixture(scope="module")
-def result(spark):
+def _merged(spark, batch_rows: int) -> pd.DataFrame:
+    """Spark output at ``batch_rows`` rows per Arrow batch, outer-merged
+    with the pandas oracle on url (every row on both sides)."""
     pdf = gen_pages(1200, seed=42)
-    sdf = spark.createDataFrame(pdf)
-    # materialize_scrubbed fills NULL-means-unchanged back to full text
-    # (the sink path a consumer shipping bytes runs) — so the byte-
-    # identity assertion below covers BOTH the kernel's scrubbed output
-    # and the native-extraction coalesce twin
-    out = pages_out(materialize_scrubbed(run_pipeline(sdf))).toPandas()
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, str(batch_rows))
+    try:
+        # materialize_scrubbed fills NULL-means-unchanged back to full
+        # text (the sink path a consumer shipping bytes runs) — so the
+        # byte-identity assertion below covers BOTH the kernel's scrubbed
+        # output and the native-extraction coalesce twin
+        out = pages_out(
+            materialize_scrubbed(run_pipeline(spark.createDataFrame(pdf)))
+        ).toPandas()
+    finally:
+        spark.conf.set(key, prev)
     ora = oracle_pipeline(pdf)
     m = out.merge(ora, on="url", suffixes=("_s", "_o"), how="outer", indicator=True)
     assert (m["_merge"] == "both").all()
-    return m
+    return m.sort_values("url").reset_index(drop=True)
+
+
+@pytest.fixture(scope="module")
+def result(spark):
+    return _merged(spark, 4096)
 
 
 def test_row_counts(result):
@@ -67,6 +80,21 @@ def test_column_parity(result, col):
     a, b = result[col + "_s"], result[col + "_o"]
     neq = (a != b) & ~(a.isna() & b.isna())
     assert int(neq.sum()) == 0
+
+
+def test_small_arrow_batches_identical(spark, result):
+    """Output does not depend on the Arrow batch size: 7-row batches
+    (odd tails in every partition) give exactly the 4096-row output the
+    tests above pin to the oracle: keep, rules, scrub bytes and every
+    column."""
+    small = _merged(spark, 7)
+    rules = ["rules_fired_s", "rules_fired_o"]
+    pd.testing.assert_frame_equal(
+        result.drop(columns=rules), small.drop(columns=rules),
+        check_exact=True,
+    )
+    for c in rules:
+        assert (result[c].map(tuple) == small[c].map(tuple)).all()
 
 
 def test_dedup_permutation_invariant(spark):
