@@ -19,7 +19,6 @@ Layout:
     plans/        the flagship quality DAG and dataset-level score tables
     sources/      readers, Iceberg-shaped writer (parquet fallback),
                   checkpoint/resume
-    streaming/    structured-streaming variant of the stateless rule stages
 """
 
 __version__ = "0.1.0"

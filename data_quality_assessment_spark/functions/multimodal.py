@@ -57,11 +57,6 @@ IMAGE_META_SCHEMA = T.StructType([
     T.StructField("valid", T.BooleanType()),
 ])
 
-IMAGE_FEATURE_SCHEMA = T.StructType([
-    T.StructField("media_id", T.LongType()),
-    T.StructField("features", T.ArrayType(T.FloatType())),
-])
-
 AUDIO_META_SCHEMA = T.StructType([
     T.StructField("media_id", T.LongType()),
     T.StructField("sample_rate", T.IntegerType()),
@@ -493,30 +488,6 @@ def image_metadata(df: DataFrame) -> DataFrame:
     return df.select("media_id", "blob").mapInPandas(fn, IMAGE_META_SCHEMA)
 
 
-def image_features(df: DataFrame, n_features: int = 16) -> DataFrame:
-    """Deterministic feature extraction stub: byte-histogram features of
-    the payload, L2-normalized — the real CNN/CLIP embedding would slot
-    in with the identical signature and batch shape."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            ids, feats = [], []
-            for mid, blob in zip(b["media_id"], b["blob"]):
-                payload = np.frombuffer(bytes(blob)[12:], dtype=np.uint8)
-                hist, _ = np.histogram(
-                    payload, bins=n_features, range=(0, 256)
-                )
-                v = hist.astype(np.float64)
-                nrm = np.sqrt((v * v).sum())
-                if nrm > 0:
-                    v = v / nrm
-                ids.append(mid)
-                feats.append(v.astype(np.float32))
-            yield pd.DataFrame({"media_id": ids, "features": feats})
-
-    return df.select("media_id", "blob").mapInPandas(fn, IMAGE_FEATURE_SCHEMA)
-
-
 def audio_metadata(df: DataFrame) -> DataFrame:
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:
@@ -797,19 +768,6 @@ def wav_samples_raw(blob: bytes):
             return None
         return (rate, channels, 1.0, np.asarray(x, dtype=np.float64))
     return None  # compressed (ADPCM/mu-law/...) — out of scope
-
-
-def wav_samples(blob: bytes):
-    """(sample_rate, mono float64 samples in [-1, 1]) — normalized,
-    channel-averaged convenience form of :func:`wav_samples_raw`."""
-    raw = wav_samples_raw(blob)
-    if raw is None:
-        return None
-    rate, channels, norm, x = raw
-    x = np.asarray(x, dtype=np.float64) / norm
-    if channels > 1:
-        x = x[:len(x) // channels * channels].reshape(-1, channels).mean(axis=1)
-    return (rate, x)
 
 
 def _exact_ssq(x: np.ndarray) -> int:

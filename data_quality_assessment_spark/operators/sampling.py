@@ -51,19 +51,6 @@ def _unit_hash(key: Column, seed: int, fast: bool) -> Column:
     return h.cast("double") / F.lit(float(1 << _MD5_BITS))
 
 
-def sample_fraction(
-    df: DataFrame, key_col: str, fraction: float, seed: int = 0,
-    *, fast: bool = True,
-) -> DataFrame:
-    """Keep a deterministic ``fraction`` of rows by key hash.
-
-    Pure codegen predicate — pushes into the scan, no shuffle, stable
-    under repartitioning/executor count, and REPEATABLE: the same
-    (key, seed) is kept or dropped identically in every run, so
-    resumed jobs and re-runs produce the same sample."""
-    return df.filter(_unit_hash(F.col(key_col), seed, fast) < fraction)
-
-
 def stratified_sample(
     df: DataFrame, key_col: str, stratum_col: str,
     fractions: dict[str, float], default_fraction: float = 0.0,
@@ -72,8 +59,11 @@ def stratified_sample(
     """Per-stratum deterministic sampling (e.g. language rebalancing:
     keep 100% of low-resource languages, 5% of English). ``fractions``
     maps stratum values to keep-rates; unlisted strata get
-    ``default_fraction``. Selection stays a per-row codegen predicate
-    (the fractions table becomes a CASE expression, not a join)."""
+    ``default_fraction``; ``fractions={}`` is a uniform sample. Selection
+    stays a per-row codegen predicate (the fractions table becomes a CASE
+    expression, not a join) — no shuffle, stable under repartitioning and
+    executor count, and repeatable: the same (key, seed) is kept or
+    dropped identically in every run."""
     frac = F.lit(float(default_fraction))
     expr = None
     for value, f in fractions.items():

@@ -431,19 +431,6 @@ def _cell_dots(vec: Column, codebook: list[list[float]]) -> Column:
     return F.array(*[_dot_literal(vec, c) for c in codebook])
 
 
-def ivf_cell(vec: Column, codebook: list[list[float]]) -> Column:
-    """Coarse assignment: argmax_c dot(vec, centroid_c), first max wins
-    (array_position semantics — mirrored by list_position in the
-    oracle).
-
-    NOTE for callers on the hot path: this expression references the
-    centroid-dots array TWICE (position + max), and Catalyst inlines the
-    whole |C|x|dim| literal subtree at each reference — materialize the
-    dots with ``with_ivf_cell`` instead, which keeps one evaluation."""
-    dots = _cell_dots(vec, codebook)
-    return (F.array_position(dots, F.array_max(dots)) - 1).cast("int")
-
-
 def with_ivf_cell(
     df: DataFrame, vec_col: str, codebook: list[list[float]],
     out_col: str = "cell", *, vectorized: bool | None = None,

@@ -13,10 +13,10 @@ Where skew actually bites in this engine, and the countermeasure used:
     at runtime (enabled in session.py).
   * **the residual case** — an aggregation whose per-group state is NOT
     map-side-collapsible (exact distinct counts, collect-style state) on
-    a hot key — needs explicit two-stage salting. That is what this
-    module provides.
+    a hot key — needs explicit two-stage salting, which
+    ``salted_distinct_count`` provides.
 
-``salted_distinct_count`` is the canonical shape: stage 1 aggregates on
+``salted_distinct_count``: stage 1 aggregates on
 (key, salt) — the hot key's rows spread over ``buckets`` reducers —
 stage 2 merges the per-salt partials on the now-tiny keyspace.
 """
@@ -56,23 +56,3 @@ def salted_distinct_count(
         F.sum("_partial").cast("long").alias("n_distinct")
     )
 
-
-def salted_repartition(
-    df: DataFrame, key: str, num_partitions: int, buckets: int = 16,
-    salt_cols: list[str] | None = None,
-) -> DataFrame:
-    """Repartition by (key, salt) so a hot key's rows spread over
-    ``buckets`` partitions instead of one — the explicit form of the
-    north_star's "repartition by url-hash with salting for skewed
-    hosts" for downstream per-partition work that groups by key.
-
-    The salt MUST be deterministic row content, never
-    ``monotonically_increasing_id``/``rand``: on a stage retry after a
-    fetch failure the recomputed nondeterministic mapping differs and
-    rows are duplicated or lost (the SPARK-23207 class of bug) —
-    precisely at the cluster scale this utility targets. Default salt:
-    hash of ALL the row's columns (``salt_cols`` narrows it when the
-    caller knows a cheaper row-unique subset)."""
-    cols = salt_cols if salt_cols is not None else df.columns
-    salt = F.pmod(F.xxhash64(*[F.col(c) for c in cols]), F.lit(buckets)).cast("int")
-    return df.repartition(num_partitions, F.col(key), salt)

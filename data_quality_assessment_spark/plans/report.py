@@ -218,17 +218,6 @@ def reference_report(
     return row.withColumn("avg_score", avg)
 
 
-def time_range(df: DataFrame, ts: str) -> DataFrame:
-    """W3 (PreProcessing.py:66-82): min/max timestamp + display format."""
-    t = F.to_timestamp(F.col(ts))
-    return df.agg(
-        F.min(t).alias("t_min"),
-        F.max(t).alias("t_max"),
-        F.date_format(F.min(t), "MMM yyyy").alias("from_label"),
-        F.date_format(F.max(t), "MMM yyyy").alias("to_label"),
-    )
-
-
 def report_json(report_row: dict, path: str) -> None:
     """S5 analog: machine-readable JSON report sink."""
     import json

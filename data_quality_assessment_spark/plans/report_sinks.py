@@ -6,9 +6,12 @@ matplotlib/pygal/fpdf (``/root/reference/scripts/PreProcessing.py:169-417``,
 so these sinks implement the two FORMATS directly from the stdlib:
 
   * PNG: zlib-compressed scanlines in IHDR/IDAT/IEND chunks (the spec's
-    minimal truecolor form) over a numpy RGB raster; bar charts and
-    histograms are drawn as filled rectangles plus a tiny built-in 5x7
-    glyph font.
+    minimal truecolor form) over a numpy RGB raster. Four charts are
+    drawn, the ones ``reference_report_artifacts`` writes: score bars and
+    the IAT histogram (filled rectangles plus a tiny built-in 5x7 glyph
+    font), the six-score radar and the average-score gauge. The
+    reference's other plots (per-entity bars, donut, box, scatter) are
+    display-only and not reproduced.
   * PDF: a single-xref document with Helvetica text lines and the score
     chart embedded as a /FlateDecode /DeviceRGB Image XObject (raw RGB,
     no JPEG needed).
@@ -57,30 +60,6 @@ def write_png(path: str, rgb: np.ndarray) -> None:
     """Write an HxWx3 uint8 array as a truecolor PNG."""
     with open(path, "wb") as f:
         f.write(encode_png(rgb))
-
-
-def read_png(path: str) -> np.ndarray:
-    """Inverse of write_png (tests + round-trip verification)."""
-    with open(path, "rb") as f:
-        data = f.read()
-    assert data[:8] == b"\x89PNG\r\n\x1a\n", "not a PNG"
-    pos, w = 8, None
-    idat = b""
-    while pos < len(data):
-        (ln,) = struct.unpack(">I", data[pos:pos + 4])
-        tag = data[pos + 4:pos + 8]
-        body = data[pos + 8:pos + 8 + ln]
-        if tag == b"IHDR":
-            w, h, depth, ctype = struct.unpack(">IIBB", body[:10])
-            assert (depth, ctype) == (8, 2), "only 8-bit RGB supported"
-        elif tag == b"IDAT":
-            idat += body
-        pos += 12 + ln
-    raw = zlib.decompress(idat)
-    stride = w * 3 + 1
-    rows = [raw[i * stride + 1:(i + 1) * stride] for i in range(h)]
-    assert all(raw[i * stride] == 0 for i in range(h)), "filters unsupported"
-    return np.frombuffer(b"".join(rows), np.uint8).reshape(h, w, 3)
 
 
 # tiny 5x7 font: digits, uppercase, and the chars the labels need.
@@ -162,42 +141,13 @@ def render_histogram(values, bins: int = 30, width: int = 640,
     return img
 
 
-def render_entity_bars(pairs, width: int = 640, truncate: int = 4,
-                       title: str = "") -> np.ndarray:
-    """Per-entity value bars (the reference's dupe-count / outage plots,
-    ``PreProcessing.py:217-224, 374-382``) with V4's display truncation:
-    entity ids are shown as their LAST ``truncate`` characters
-    (``str[-4:]``, ``PreProcessing.py:117, 305-308``)."""
-    pairs = list(pairs)
-    row_h, pad, label_w = 22, 10, 90
-    h = pad * 2 + row_h * len(pairs) + (14 if title else 0)
-    img = np.full((max(h, 40), width, 3), 255, np.uint8)
-    y0 = pad
-    if title:
-        _draw_text(img, 8, y0, title[:60])
-        y0 += 14
-    top = max((float(v) for _e, v in pairs), default=1.0) or 1.0
-    chart_w = width - label_w - 80
-    for i, (ent, val) in enumerate(pairs):
-        y = y0 + i * row_h
-        _draw_text(img, 8, y + 6, str(ent)[-truncate:])  # V4
-        img[y + 4:y + row_h - 5,
-            label_w:label_w + int(float(val) / top * chart_w)] = (70, 130, 180)
-        _draw_text(img, label_w + chart_w + 8, y + 6, f"{float(val):g}"[:9])
-    return img
-
-
 # ---------------------------------------------------------------------------
-# the reference's remaining plot geometries: radar / donut / gauge / box /
-# scatter (``/root/reference/scripts/PreProcessing.py:169-417``, rendered
-# there with matplotlib+pygal; here: numpy rasters over the same PNG sink)
+# radar and gauge (the reference's ``scripts/PreProcessing.py:169-417``,
+# rendered there with matplotlib+pygal; here: numpy rasters over the same
+# PNG sink)
 # ---------------------------------------------------------------------------
 
 _BLUE = (70, 130, 180)
-_PALETTE = [
-    (70, 130, 180), (205, 92, 92), (60, 160, 90), (218, 165, 32),
-    (123, 104, 238), (95, 158, 160), (188, 120, 60), (120, 120, 120),
-]
 
 
 def _fill_polygon(img: np.ndarray, pts: list[tuple[float, float]],
@@ -277,34 +227,6 @@ def render_radar(scores: dict[str, float], size: int = 420) -> np.ndarray:
     return img
 
 
-def render_donut(parts: dict[str, float], size: int = 360) -> np.ndarray:
-    """Donut chart of non-negative parts (the reference's pygal donut
-    path): ring segments proportional to each part's share, legend
-    swatches below."""
-    legend_h = 16 * len(parts) + 10
-    img = np.full((size + legend_h, size, 3), 255, np.uint8)
-    cx = cy = size // 2
-    r1 = size // 2 - 12
-    r0 = int(r1 * 0.55)
-    yy, xx = np.mgrid[0:size, 0:size]
-    dx, dy = xx - cx, yy - cy
-    rr = np.hypot(dx, dy)
-    theta = np.mod(np.arctan2(dy, dx) + np.pi / 2, 2 * np.pi)  # 12 o'clock=0
-    total = sum(max(0.0, float(v)) for v in parts.values()) or 1.0
-    a = 0.0
-    for i, (name, v) in enumerate(parts.items()):
-        frac = max(0.0, float(v)) / total
-        b = a + frac * 2 * np.pi
-        mask = (rr >= r0) & (rr <= r1) & (theta >= a) & (theta < b)
-        img[:size][mask] = _PALETTE[i % len(_PALETTE)]
-        a = b
-    for i, (name, v) in enumerate(parts.items()):
-        y = size + 4 + 16 * i
-        img[y:y + 10, 8:18] = _PALETTE[i % len(_PALETTE)]
-        _draw_text(img, 24, y + 1, f"{name[:20]} {float(v):g}"[:30])
-    return img
-
-
 def render_gauge(value: float, title: str = "", size: int = 360) -> np.ndarray:
     """Semicircular gauge for one [0,1] score (the reference's gauge
     path): grey track, value arc sweeping left -> right, needle, value
@@ -329,58 +251,6 @@ def render_gauge(value: float, title: str = "", size: int = 360) -> np.ndarray:
     if title:
         _draw_text(img, 10, 8, title[:40])
     _draw_text(img, cx - 18, cy + 14, f"{v:.3f}")
-    return img
-
-
-def render_box(values, width: int = 240, height: int = 320,
-               title: str = "") -> np.ndarray:
-    """Vertical box-and-whisker of a numeric sequence (the reference's
-    IAT box plot): Q1/median/Q3 box, min/max whiskers."""
-    img = np.full((height, width, 3), 255, np.uint8)
-    vals = np.asarray(list(values), dtype=np.float64)
-    if title:
-        _draw_text(img, 8, 6, title[:30])
-    if len(vals) == 0:
-        return img
-    lo, q1, med, q3, hi = np.percentile(vals, [0, 25, 50, 75, 100])
-    span = (hi - lo) or 1.0
-    top, bot = 30, height - 20
-    def ypix(v: float) -> int:
-        return int(bot - (v - lo) / span * (bot - top))
-    cx = width // 2
-    bw = width // 3
-    _draw_line(img, cx, ypix(lo), cx, ypix(q1), (60, 60, 60))
-    _draw_line(img, cx, ypix(q3), cx, ypix(hi), (60, 60, 60))
-    for v in (lo, hi):
-        _draw_line(img, cx - bw // 2, ypix(v), cx + bw // 2, ypix(v),
-                   (60, 60, 60))
-    y_q1, y_q3 = ypix(q1), ypix(q3)
-    img[min(y_q3, y_q1):max(y_q1, y_q3) + 1, cx - bw:cx + bw] = (164, 196, 220)
-    for v, c in ((q1, (60, 60, 60)), (q3, (60, 60, 60)), (med, (205, 92, 92))):
-        _draw_line(img, cx - bw, ypix(v), cx + bw, ypix(v), c, thick=2)
-    return img
-
-
-def render_scatter(xs, ys, width: int = 420, height: int = 300,
-                   title: str = "") -> np.ndarray:
-    """Scatter plot of paired numeric sequences (the reference's
-    outlier scatter path); 3x3-pixel points, axes at data bounds."""
-    img = np.full((height, width, 3), 255, np.uint8)
-    x = np.asarray(list(xs), dtype=np.float64)
-    y = np.asarray(list(ys), dtype=np.float64)
-    if title:
-        _draw_text(img, 8, 6, title[:40])
-    if len(x) == 0 or len(x) != len(y):
-        return img
-    pad = 20
-    sx = (x - x.min()) / ((x.max() - x.min()) or 1.0)
-    sy = (y - y.min()) / ((y.max() - y.min()) or 1.0)
-    px = (pad + sx * (width - 2 * pad)).astype(int)
-    py = (height - pad - sy * (height - 2 * pad - 14)).astype(int)
-    img[height - pad:height - pad + 1, pad:width - pad] = (180, 180, 180)
-    img[24:height - pad, pad - 1:pad] = (180, 180, 180)
-    for a, b in zip(px, py):
-        img[max(0, b - 1):b + 2, max(0, a - 1):a + 2] = _BLUE
     return img
 
 

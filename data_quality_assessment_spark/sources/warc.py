@@ -14,14 +14,15 @@ headers + body); CC ``.warc.gz`` files are per-record gzip MEMBERS
 concatenated — Python's gzip transparently decompresses the
 concatenation, so one decompress pass per file suffices.
 
-Scale shape: Spark's ``binaryFile`` source distributes whole files
-(WARC is not line-splittable — records span arbitrary byte ranges, and
-CC publishes ~1 GB files, well under an executor's memory); parsing is
-one streaming pass per file inside ``mapInPandas``. The output drops
-to (url, warc_ts, html, ...) — the engine's pages schema — so the raw
-bytes never cross a shuffle. Parity with the real format is pinned by
-round-trip tests over records WRITTEN by ``write_warc`` (spec layout)
-and by hand-built fixtures with multi-record gzip members.
+Scale shape: WARC is not line-splittable (records span arbitrary byte
+ranges; CC publishes ~1 GB files, well under an executor's memory), so
+the unit of work is one whole file. ``iter_rows_from_file_bytes`` parses
+a file's bytes in one streaming pass into rows of ``WARC_RECORD_SCHEMA``
+(url, warc_ts, html, ... — the engine's pages shape); a caller runs it
+inside ``mapInPandas``, as the ``warc_roundtrip`` query in
+``__spark_entry__.py`` does, so the raw bytes never cross a shuffle. Parity with the real format is
+pinned by round-trip tests over records WRITTEN by ``write_warc`` (spec
+layout) and by hand-built fixtures with multi-record gzip members.
 """
 
 from __future__ import annotations
@@ -31,9 +32,6 @@ import io
 from collections.abc import Iterator
 from datetime import datetime, timezone
 
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 WARC_RECORD_SCHEMA = T.StructType([
@@ -120,7 +118,7 @@ def iter_rows_from_file_bytes(content: bytes) -> Iterator[tuple]:
     """File bytes (.warc or .warc.gz) -> rows of WARC_RECORD_SCHEMA,
     yielded as parsed. Gzip input decompresses INCREMENTALLY
     (``gzip.GzipFile`` reads concatenated CC members transparently), so
-    peak memory is the raw file (held by binaryFile) + one record —
+    peak memory is the raw file + one record —
     never the whole decompressed stream."""
     fobj = (
         gzip.GzipFile(fileobj=io.BytesIO(content))
@@ -144,43 +142,9 @@ def iter_rows_from_file_bytes(content: bytes) -> Iterator[tuple]:
 
 
 def records_from_file_bytes(content: bytes) -> list[tuple]:
-    """Materialized form of :func:`iter_rows_from_file_bytes` (tests)."""
+    """Materialized form of :func:`iter_rows_from_file_bytes` (tests and
+    the ``warc_roundtrip`` query)."""
     return list(iter_rows_from_file_bytes(content))
-
-
-def read_warc(
-    spark: SparkSession, path: str, *, responses_only: bool = True
-) -> DataFrame:
-    """Distributed WARC scan: binaryFile source (one task per file) ->
-    per-file streaming parse -> WARC_RECORD_SCHEMA rows. With
-    ``responses_only`` (the quality-pipeline case) only ``response``
-    records survive, and the result plugs straight into
-    ``plans.pipeline.run_pipeline`` after renaming ``html``."""
-    files = spark.read.format("binaryFile").load(path)
-
-    cols = ["url", "warc_ts", "warc_type", "content_type",
-            "http_status", "html"]
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # emit bounded chunks: a 1 GB CC file holds ~50-100k records;
-        # 2000 rows/DataFrame keeps the Arrow batch + record bodies
-        # well under executor-python memory regardless of file size
-        chunk = 2000
-        for b in batches:
-            rows: list[tuple] = []
-            for content in b["content"]:
-                for row in iter_rows_from_file_bytes(bytes(content)):
-                    rows.append(row)
-                    if len(rows) >= chunk:
-                        yield pd.DataFrame(rows, columns=cols)
-                        rows = []
-            if rows:
-                yield pd.DataFrame(rows, columns=cols)
-
-    out = files.select("content").mapInPandas(fn, WARC_RECORD_SCHEMA)
-    if responses_only:
-        out = out.filter(F.col("warc_type") == "response")
-    return out
 
 
 def write_warc(

@@ -1,0 +1,65 @@
+"""No package code that only tests reach.
+
+Every top-level def, class and assignment in the package must be named
+somewhere in the non-test code: the package itself, ``jobs/``,
+``tools/``, ``perfbench/``, ``bench.py`` or ``__spark_entry__.py``. A
+use is any identifier token with that name outside the symbol's own
+definition. A name nothing ships is dead weight the tests keep alive;
+delete it, or move a reference implementation the tests need into
+``tests/oracle.py``. Dunder names (``__version__``) are read by Python
+and packaging tools, not by identifier, and are not checked.
+"""
+
+from __future__ import annotations
+
+import ast
+import re
+from collections import Counter
+from pathlib import Path
+
+ROOT = Path(__file__).resolve().parent.parent
+PACKAGE = ROOT / "data_quality_assessment_spark"
+WORD = re.compile(r"[A-Za-z_]\w*")
+
+
+def _non_test_files() -> list[Path]:
+    files = sorted(PACKAGE.rglob("*.py"))
+    for d in ("jobs", "tools", "perfbench"):
+        files += sorted((ROOT / d).rglob("*.py"))
+    return files + [ROOT / "bench.py", ROOT / "__spark_entry__.py"]
+
+
+def _top_level_names(tree: ast.Module):
+    """(name, first line, last line) of each top-level definition."""
+    for node in tree.body:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
+                             ast.ClassDef)):
+            names = [node.name]
+        elif isinstance(node, ast.Assign):
+            names = [t.id for t in node.targets if isinstance(t, ast.Name)]
+        elif isinstance(node, ast.AnnAssign) and isinstance(node.target,
+                                                            ast.Name):
+            names = [node.target.id]
+        else:
+            continue
+        for name in names:
+            if not (name.startswith("__") and name.endswith("__")):
+                yield name, node.lineno, node.end_lineno
+
+
+def test_every_package_symbol_has_a_non_test_use():
+    lines = {f: f.read_text().splitlines() for f in _non_test_files()}
+    uses = Counter(w for ls in lines.values() for ln in ls
+                   for w in WORD.findall(ln))
+    unused = []
+    for f in sorted(PACKAGE.rglob("*.py")):
+        tree = ast.parse("\n".join(lines[f]))
+        for name, first, last in _top_level_names(tree):
+            own = sum(WORD.findall(ln).count(name)
+                      for ln in lines[f][first - 1:last])
+            if uses[name] == own:
+                unused.append(f"{f.relative_to(ROOT)}:{first} {name}")
+    assert not unused, (
+        "package symbols reached only by tests (delete them, or move "
+        "test-only helpers into tests/):\n  " + "\n  ".join(unused)
+    )

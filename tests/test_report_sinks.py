@@ -1,12 +1,13 @@
 """PNG (S7) / PDF (S6) presentation sinks — dependency-free format
 writers verified structurally: PNG round-trips bit-exact through the
-in-repo reader (signature, IHDR, zlib scanlines), the PDF carries a
+reader below (signature, IHDR, zlib scanlines), the PDF carries a
 valid xref/trailer and the embedded FlateDecode image decompresses to
 the chart raster."""
 
 from __future__ import annotations
 
 import re
+import struct
 import zlib
 
 import numpy as np
@@ -14,12 +15,36 @@ import numpy as np
 from data_quality_assessment_spark.plans import report_sinks as rs
 
 
+def read_png(path: str) -> np.ndarray:
+    """Inverse of ``rs.write_png``: 8-bit RGB, filter-0 scanlines only."""
+    with open(path, "rb") as f:
+        data = f.read()
+    assert data[:8] == b"\x89PNG\r\n\x1a\n", "not a PNG"
+    pos, w = 8, None
+    idat = b""
+    while pos < len(data):
+        (ln,) = struct.unpack(">I", data[pos:pos + 4])
+        tag = data[pos + 4:pos + 8]
+        body = data[pos + 8:pos + 8 + ln]
+        if tag == b"IHDR":
+            w, h, depth, ctype = struct.unpack(">IIBB", body[:10])
+            assert (depth, ctype) == (8, 2), "only 8-bit RGB supported"
+        elif tag == b"IDAT":
+            idat += body
+        pos += 12 + ln
+    raw = zlib.decompress(idat)
+    stride = w * 3 + 1
+    rows = [raw[i * stride + 1:(i + 1) * stride] for i in range(h)]
+    assert all(raw[i * stride] == 0 for i in range(h)), "filters unsupported"
+    return np.frombuffer(b"".join(rows), np.uint8).reshape(h, w, 3)
+
+
 def test_png_roundtrip(tmp_path):
     rng = np.random.RandomState(0)
     img = rng.randint(0, 256, (23, 41, 3), dtype=np.uint8)
     p = str(tmp_path / "x.png")
     rs.write_png(p, img)
-    back = rs.read_png(p)
+    back = read_png(p)
     assert back.shape == img.shape and (back == img).all()
     with open(p, "rb") as f:
         head = f.read(8)
@@ -85,26 +110,9 @@ def test_reference_report_artifacts(tmp_path):
 
     for k in ("scores_png", "iat_png", "report_pdf", "report_json"):
         assert os.path.getsize(paths[k]) > 100, k
-    assert rs.read_png(paths["scores_png"]).shape[2] == 3
+    assert read_png(paths["scores_png"]).shape[2] == 3
     doc = json.load(open(paths["report_json"]))
     assert doc["dupe"] == 1.0
-
-
-def test_entity_bars_v4_truncation(tmp_path):
-    """V4 (PreProcessing.py:117): entity ids truncated to the last 4
-    chars for display."""
-    img = rs.render_entity_bars(
-        [("bus_trip_8841", 120.0), ("bus_trip_0007", 30.0)],
-        title="OUTAGE SEC",
-    )
-    # the '8841' label renders as dark pixels in the label gutter
-    dark = (img < 100).all(axis=2)
-    assert dark[:, :90].sum() > 50
-    blue = (img == np.array([70, 130, 180], np.uint8)).all(axis=2)
-    per_row = blue.sum(axis=1)
-    nz = per_row[per_row > 0]
-    assert nz.max() >= 3.5 * nz.min()  # 120 vs 30 bar lengths
-    rs.write_png(str(tmp_path / "e.png"), img)
 
 
 def test_radar_render(tmp_path):
@@ -116,17 +124,7 @@ def test_radar_render(tmp_path):
     n_lo = (lo == fill).all(axis=2).sum()
     assert n_hi > 4 * n_lo > 0
     rs.write_png(str(tmp_path / "r.png"), hi)
-    assert (rs.read_png(str(tmp_path / "r.png")) == hi).all()
-
-
-def test_donut_render():
-    """Segment pixel shares track the part fractions (3:1 here)."""
-    img = rs.render_donut({"kept": 75.0, "dropped": 25.0})
-    c0 = (img == np.array(rs._PALETTE[0], np.uint8)).all(axis=2).sum()
-    c1 = (img == np.array(rs._PALETTE[1], np.uint8)).all(axis=2).sum()
-    c1 -= 10 * 10  # legend swatch pixels
-    assert c0 > 0 and c1 > 0
-    assert 2.0 < c0 / c1 < 4.0
+    assert (read_png(str(tmp_path / "r.png")) == hi).all()
 
 
 def test_gauge_render():
@@ -142,20 +140,3 @@ def test_gauge_render():
     grey = (q1 == np.array([225, 225, 225], np.uint8)).all(axis=2).sum()
     assert grey > n1
 
-
-def test_box_render():
-    """Median line sits between the quartile lines; box between
-    whiskers."""
-    vals = [1, 2, 3, 4, 5, 6, 7, 8, 9, 100]  # skewed: median low
-    img = rs.render_box(vals, title="IAT")
-    red = (img == np.array([205, 92, 92], np.uint8)).all(axis=2)
-    rows = np.where(red.any(axis=1))[0]
-    assert len(rows) > 0
-    # skew pushes the median line into the bottom third of the plot
-    assert rows.mean() > img.shape[0] * 0.6
-
-
-def test_scatter_render():
-    img = rs.render_scatter([0, 1, 2, 3], [0, 1, 4, 9], title="XY")
-    blue = (img == np.array([70, 130, 180], np.uint8)).all(axis=2)
-    assert 4 * 4 <= blue.sum() <= 4 * 16  # four 3x3-ish points

@@ -18,21 +18,25 @@ def docs(spark):
     )
 
 
+def _uniform(df, fraction, seed, fast=True):
+    """A uniform sample: no per-stratum rates, every row at ``fraction``."""
+    out = sp.stratified_sample(
+        df, "doc_id", "lang", {}, default_fraction=fraction, seed=seed,
+        fast=fast,
+    )
+    return {r.doc_id for r in out.collect()}
+
+
 def test_sample_fraction_deterministic_and_layout_stable(spark, docs):
-    a = {r.doc_id for r in sp.sample_fraction(docs, "doc_id", 0.2, seed=5).collect()}
-    b = {
-        r.doc_id
-        for r in sp.sample_fraction(
-            docs.repartition(13).orderBy(F.desc("doc_id")), "doc_id", 0.2, seed=5
-        ).collect()
-    }
+    a = _uniform(docs, 0.2, seed=5)
+    b = _uniform(docs.repartition(13).orderBy(F.desc("doc_id")), 0.2, seed=5)
     assert a == b
     assert 0.15 < len(a) / 5000 < 0.25
     # different seed -> a different (roughly independent) sample
-    c = {r.doc_id for r in sp.sample_fraction(docs, "doc_id", 0.2, seed=6).collect()}
+    c = _uniform(docs, 0.2, seed=6)
     assert c != a
     # nested property: a smaller fraction with the same seed is a SUBSET
-    d = {r.doc_id for r in sp.sample_fraction(docs, "doc_id", 0.1, seed=5).collect()}
+    d = _uniform(docs, 0.1, seed=5)
     assert d <= a
 
 
@@ -67,8 +71,8 @@ def test_split_disjoint_exhaustive_stable(spark, docs):
 
 
 def test_md5_family_matches_rates_and_is_deterministic(spark, docs):
-    a = {r.doc_id for r in sp.sample_fraction(docs, "doc_id", 0.3, seed=2, fast=False).collect()}
-    b = {r.doc_id for r in sp.sample_fraction(docs, "doc_id", 0.3, seed=2, fast=False).collect()}
+    a = _uniform(docs, 0.3, seed=2, fast=False)
+    b = _uniform(docs, 0.3, seed=2, fast=False)
     assert a == b
     assert 0.25 < len(a) / 5000 < 0.35
 

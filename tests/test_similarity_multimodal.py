@@ -108,17 +108,6 @@ def test_image_metadata(spark, media):
     assert got[3].width is None
 
 
-def test_image_features_shape_and_determinism(spark, media):
-    img = media.filter("media_id in (1, 2)")
-    a = {r.media_id: r.features for r in mm.image_features(img).collect()}
-    b = {r.media_id: r.features for r in mm.image_features(img).collect()}
-    assert a.keys() == {1, 2}
-    assert all(len(v) == 16 for v in a.values())
-    assert a == b
-    nrm = sum(x * x for x in a[1]) ** 0.5
-    assert abs(nrm - 1.0) < 1e-5
-
-
 def test_audio_metadata(spark, media):
     got = {
         r.media_id: r
@@ -144,8 +133,8 @@ def test_ivf_topk_recall_and_partition(spark, vectors):
     """IVF-flat: every corpus vector in exactly one cell; nprobe search
     recovers most of the exact top-5 on clustered data, and recall is
     monotone in nprobe (more probed cells can only add candidates)."""
-    cells = vectors.select(
-        sim.ivf_cell(F.col("embedding"), sim.ivf_codebook(8, DIM)).alias("c")
+    cells = sim.with_ivf_cell(
+        vectors, "embedding", sim.ivf_codebook(8, DIM), "c"
     ).collect()
     assert all(0 <= r.c < 8 for r in cells)
 
@@ -381,9 +370,7 @@ def test_wav_samples_roundtrip_16bit():
     rate, ch, norm, x = mm.wav_samples_raw(blob)
     assert (rate, ch, norm) == (8000, 1, 32768.0)
     assert x.tolist() == s.tolist()
-    rate2, mono = mm.wav_samples(blob)
-    assert rate2 == 8000
-    np.testing.assert_allclose(mono, s / 32768.0)
+    np.testing.assert_allclose(x / norm, s / 32768.0)
 
 
 def test_wav_samples_8_and_32_bit():
@@ -433,8 +420,17 @@ def test_wav_samples_stereo_mono_mix():
 
     inter = np.array([100, 300, -100, -300], dtype=np.int64)  # L,R,L,R
     blob = mm.encode_wav(8000, inter, channels=2)
-    rate, mono = mm.wav_samples(blob)
-    np.testing.assert_allclose(mono, [200 / 32768.0, -200 / 32768.0])
+    rate, ch, norm, x = mm.wav_samples_raw(blob)
+    assert (rate, ch, norm) == (8000, 2, 32768.0)
+    assert x.tolist() == inter.tolist()  # interleaved, not mixed
+    # audio_features mixes to mono: (100 + 300) / 2, (-100 - 300) / 2
+    import pandas as pd
+
+    batch = pd.DataFrame({"media_id": [1], "blob": [blob]})
+    (feats,) = mm.audio_features_batches(iter([batch]))
+    got = feats.iloc[0]
+    assert got.n_samples == 2
+    assert got.rms == got.peak == round(200 / 32768.0, 6)
 
 
 def test_audio_features_values(spark):

@@ -3,7 +3,6 @@
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from data_quality_assessment_spark.operators import cadence, skew
 
@@ -22,16 +21,6 @@ def test_salted_distinct_count_exact(spark):
         for r in skew.salted_distinct_count(df, "k", "v", buckets=8).collect()
     }
     assert got == {"hot": 13, "a": 4, "b": 1}
-
-
-def test_salted_repartition_preserves_rows(spark):
-    df = spark.range(1000).withColumn("k", F.lit("hot"))
-    out = skew.salted_repartition(df, "k", 16, buckets=8)
-    assert out.count() == 1000
-    # rows actually spread: no single partition holds everything
-    sizes = out.withColumn("p", F.spark_partition_id()) \
-        .groupBy("p").count().collect()
-    assert max(r["count"] for r in sizes) < 1000
 
 
 def test_host_cadence_over_pages(spark):
@@ -81,34 +70,6 @@ def test_cadence_pandas_matches_columnar(spark):
     for e in range(12):
         assert pd_scores[e][0] == pytest.approx(col_reg[e], abs=1e-6), e
         assert pd_scores[e][1] == pytest.approx(col_out[e], abs=1e-6), e
-
-
-def test_salted_repartition_is_deterministic(spark):
-    """The salt must be a function of row CONTENT (ADVICE r1 #2): the
-    same row lands in the same partition on every evaluation, so a stage
-    retry recomputes the identical mapping (SPARK-23207 class)."""
-    from pyspark.sql import functions as F
-
-    df = spark.range(2000).select(
-        (F.col("id") % 7).alias("k"), F.col("id").alias("v")
-    )
-    out = skew.salted_repartition(df, "k", 16, buckets=8)
-    a = sorted(
-        (r.k, r.v, r.p)
-        for r in out.withColumn("p", F.spark_partition_id()).collect()
-    )
-    b = sorted(
-        (r.k, r.v, r.p)
-        for r in out.withColumn("p", F.spark_partition_id()).collect()
-    )
-    assert a == b
-    # and the hot keyspace actually spreads: >1 partition per key
-    from collections import defaultdict
-
-    parts = defaultdict(set)
-    for k, _v, p in a:
-        parts[k].add(p)
-    assert all(len(ps) > 1 for ps in parts.values()), parts
 
 
 def test_minmax_scale_and_regularity_old(spark):

@@ -1,6 +1,5 @@
 """WARC ingest: spec-layout round trip (plain + per-record-gzip like
-Common Crawl), truncated-file tolerance, HTTP block parsing, and the
-distributed binaryFile path into the pages pipeline."""
+Common Crawl), truncated-file tolerance and HTTP block parsing."""
 
 from __future__ import annotations
 
@@ -63,32 +62,3 @@ def test_non_http_block_passthrough():
     assert rows[0][4] is None
     assert rows[0][5] == b"robots: x"
 
-
-def test_read_warc_distributed_into_pipeline(spark, tmp_path):
-    """binaryFile scan -> parse -> pages schema -> the flagship
-    pipeline runs end-to-end on WARC-born rows."""
-    from pyspark.sql import functions as F
-
-    from data_quality_assessment_spark.plans.pipeline import (
-        pages_out, run_pipeline,
-    )
-
-    (tmp_path / "a.warc").write_bytes(warc.write_warc(_recs()))
-    (tmp_path / "b.warc.gz").write_bytes(
-        warc.write_warc(
-            [("https://d.example/w", dt.datetime(2023, 5, 2),
-              b"<html><body>the data page is open and fine</body></html>")],
-            compress=True,
-        )
-    )
-    df = warc.read_warc(spark, str(tmp_path) + "/*")
-    assert df.count() == 4
-    pages = df.select(
-        "url", "warc_ts", "html",
-        F.lit(None).cast("string").alias("text"),
-        F.lit(None).cast("string").alias("lang"),
-    )
-    out = pages_out(run_pipeline(pages)).collect()
-    assert len(out) == 4
-    by_url = {r.url: r for r in out}
-    assert by_url["https://d.example/w"].nw > 0
