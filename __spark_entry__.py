@@ -2615,8 +2615,9 @@ def q_pipeline_verdict(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_pipeline_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The scrub output, materialized to full bytes (the engine-internal
-    form keeps scrubbed_text NULL when no rule fired — see
-    kernel._enrich_batch_scalar; this query ships what a consumer reads)."""
+    form keeps scrubbed_text NULL when no rule fired — see the
+    functions/kernel.py module docstring; this query ships what a
+    consumer reads)."""
     pages = _pages(spark, sf_dir)
     out = pipeline.materialize_scrubbed(
         pipeline.run_pipeline(pages, DEFAULT_CONFIG)

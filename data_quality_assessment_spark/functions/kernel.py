@@ -9,25 +9,36 @@ and the heuristic text statistics. Shared across:
   * the pandas test oracle (same functions, same floats — byte-identical
     by construction).
 
-Two implementations, pinned equal by tests/test_kernel_parity.py, and
-one rule choosing between them (``_vector_ok``):
+One implementation, ``_enrich_from_arr``: the batch-vectorized kernel
+(guide §4.2: hand whole Arrow batches to native code instead of looping
+rows), pinned to the per-doc composition of ``textcore`` functions by
+tests/test_kernel_parity.py. Tokenization, vocab-id lookup, script
+counting, perplexity sums, bigram counting, dup-line counting and the
+text stats all run as a handful of pyarrow.compute / numpy calls over
+the WHOLE batch; only the cheap per-doc finishing arithmetic (branchy
+lang decision, math.exp + round for bit-parity with libm) stays in a
+Python loop. Token-level string work (lowercase, vocab lookup, lengths,
+the non-ASCII fallback) runs over the batch's token DICTIONARY (unique
+tokens) and is gathered back through the dictionary codes.
 
-  * ``_enrich_batch_scalar`` — the reference per-doc loop (the original
-    kernel). Used only for the swapped-in real-model paths (fastText /
-    ARPA LM), and as the definition of record.
-  * ``_enrich_batch_vector`` — the batch-vectorized fast path (guide
-    §4.2: hand whole Arrow batches to native code instead of looping
-    rows). Tokenization, vocab-id lookup, script counting, perplexity
-    sums, bigram counting, dup-line counting and the text stats all run
-    as a handful of pyarrow.compute / numpy calls over the WHOLE batch;
-    only the cheap per-doc finishing arithmetic (branchy lang decision,
-    math.exp + round for bit-parity with libm) stays in a Python loop.
-    Token-level string work (lowercase, vocab lookup, lengths, the
-    non-ASCII fallback) runs over the batch's token DICTIONARY (unique
-    tokens) and is gathered back through the dictionary codes.
-    Measured ~4x docs/sec over the scalar loop on the bench corpus.
+Two per-doc model hooks in the finishing loop serve the swapped-in real
+models (``model_loaders``); every stage a model does not replace keeps
+its batch form:
+  * a fastText langid (``DQ_SPARK_FASTTEXT``) gives ``lang_pred`` /
+    ``lang_conf`` through ``ft.predict_lang(txt)``;
+  * an LM without the id API (``ArpaLM``, ``DQ_SPARK_LM_ARPA``) gives
+    ``ppl`` through ``model.perplexity(txt)``, and ``_lp_sums`` is
+    skipped.
+While a hook is active every row's text is materialized; otherwise only
+the rows the scrub gate or the dup-line rule hand to ``textcore``.
 
-Bit-exactness of the fast path rests on verified equivalences:
+``scrubbed_text`` is NULL when no scrub rule fired: scrubbed text ==
+extracted text exactly when every rule count is 0 (a subn with n>0
+always changes the text). On clean web text this shrinks the dominant
+Arrow output column to near zero; consumers needing the bytes coalesce
+via ``plans.pipeline.materialize_scrubbed`` (native extraction twin).
+
+Bit-exactness of the vector kernel rests on verified equivalences:
   * pyarrow ``ascii_split_whitespace`` splits on exactly the pinned
     ``[ \\t\\n\\r\\f\\x0B]`` class (empties filtered on both sides);
   * ``ascii_lower`` == ``str.lower`` for ASCII tokens; non-ASCII tokens
@@ -39,9 +50,10 @@ Bit-exactness of the fast path rests on verified equivalences:
     grouping gives bit-identical totals to the sequential loop;
   * ratio columns are single IEEE divisions of exactly-representable
     integers — identical element-wise in numpy and Python;
-  * the dup-line fast path (Arrow trim == ``str.strip``) applies only to
-    ASCII docs without U+001C..U+001F (Python ``isspace`` is true for
-    those, Unicode White_Space is not); other docs take the scalar;
+  * the dup-line batch path (Arrow trim == ``str.strip``) applies only
+    to ASCII docs without U+001C..U+001F (Python ``isspace`` is true for
+    those, Unicode White_Space is not); other docs take
+    ``textcore.dup_line_frac``;
   * the scrub gate regex is ASCII-case-exact and only ever WIDENS the
     set of rows handed to the real ``scrub_text`` (non-ASCII rows are
     always handed over), so gated-out rows are provably untouched;
@@ -64,17 +76,9 @@ ENRICH_COLS = (
 )
 
 
-def _vector_ok(model, ft=None) -> bool:
-    """The one scalar-vs-vector rule, for every batch size: the vector
-    path scores from the frozen BigramLM's id API and runs the
-    heuristic langid, so a swapped-in real model (ARPA LM without
-    ``perplexity_ids``, or any fastText langid) takes the scalar loop."""
-    return ft is None and hasattr(model, "perplexity_ids")
-
-
 def enrich_batch(htmls, texts) -> dict[str, list]:
     """Columnar enrich over parallel sequences of (html, text): a list
-    view of ``enrich_batch_arrow`` (same dispatch, same output).
+    view of ``enrich_batch_arrow`` (same output).
 
     Extraction precedence: html when present, else the text column.
     Returns {column: list} in ENRICH_COLS order, ready for
@@ -89,84 +93,14 @@ def enrich_batch(htmls, texts) -> dict[str, list]:
 
 
 # ---------------------------------------------------------------------------
-# scalar reference path (the original kernel loop)
+# vectorized kernel
 # ---------------------------------------------------------------------------
 
-
-def _enrich_batch_scalar(htmls, texts, model=None, ft=None) -> dict[str, list]:
-    if model is None:
-        model = get_model()
-        from .model_loaders import get_fasttext
-
-        ft = get_fasttext()
-    # the frozen BigramLM scores straight from the shared ids array; a
-    # swapped-in real LM (model_loaders.ArpaLM) scores from the tokens
-    use_ids = hasattr(model, "perplexity_ids")
-    out: dict[str, list] = {k: [] for k in ENRICH_COLS}
-    ap = {k: out[k].append for k in ENRICH_COLS}
-    n_stop = textcore.N_STOPWORDS
-    symbol_findall = textcore._SYMBOL_RE.findall
-    for b, t in zip(htmls, texts):
-        if b is not None:
-            txt = textcore.extract_text(bytes(b))
-        elif isinstance(t, str):
-            txt = t
-        else:
-            txt = ""
-        toks = textcore.tokenize(txt)
-        nw = len(toks)
-        ids = textcore.word_ids(toks)
-        lang, conf = (
-            ft.predict_lang(txt) if ft is not None
-            else textcore.lang_id(txt, toks, ids=ids)
-        )
-        scrubbed, c = textcore.scrub_text(txt)
-        ap["lang_pred"](lang)
-        ap["lang_conf"](conf)
-        ap["ppl"](
-            model.perplexity_ids(ids) if use_ids
-            else model.perplexity(txt, toks)
-        )
-        ap["top_bigram_share"](textcore.top_bigram_share(txt, toks))
-        # NULL means "no scrub rule fired: scrubbed text == extracted
-        # text" (exactly when every rule count is 0 — a subn with n>0
-        # always changes the text). On clean web text (the common case)
-        # this shrinks the dominant Arrow output column to near zero —
-        # the UDF no longer echoes the whole document back to the JVM.
-        # Consumers needing the bytes coalesce via
-        # plans.pipeline.materialize_scrubbed (native extraction twin).
-        ap["scrubbed_text"](
-            scrubbed
-            if (c["pii_email"] or c["pii_ip"] or c["pii_phone"]
-                or c["toxicity_slur"])
-            else None
-        )
-        ap["pii_email"](c["pii_email"])
-        ap["pii_ip"](c["pii_ip"])
-        ap["pii_phone"](c["pii_phone"])
-        ap["toxicity_slur"](c["toxicity_slur"])
-        ap["nw"](nw)
-        if nw:
-            ap["mean_wl"](sum(map(len, toks)) / nw)
-            ap["symbol_ratio"](len(symbol_findall(txt)) / nw)
-            ap["stopword_frac"](int((ids < n_stop).sum()) / nw)
-        else:
-            ap["mean_wl"](0.0)
-            ap["symbol_ratio"](0.0)
-            ap["stopword_frac"](0.0)
-        ap["dup_line_frac"](textcore.dup_line_frac(txt))
-    return out
-
-
-# ---------------------------------------------------------------------------
-# vectorized fast path
-# ---------------------------------------------------------------------------
-
-_VEC = None  # lazy per-process constants (built on first vector batch)
+_VEC = None  # lazy per-process constants (built on first batch)
 
 
 def _vector_consts():
-    """Precomputed tables for the vector path (per-process, built once).
+    """Precomputed tables for the kernel (per-process, built once).
 
     * gate_re: ASCII-case-exact combined scrub-gate regex — any '@',
       any ASCII digit, or any slur spelled with per-character case
@@ -319,10 +253,8 @@ def ppl_batch(texts, model=None) -> list[float]:
         model = get_model()
     txts = [t if isinstance(t, str) else "" for t in texts]
     n = len(txts)
-    if not _vector_ok(model):
-        return [
-            model.perplexity(t, textcore.tokenize(t)) for t in txts
-        ]
+    if not hasattr(model, "perplexity_ids"):  # ArpaLM: per-doc hook
+        return [model.perplexity(t) for t in txts]
     global _VEC
     if _VEC is None:
         _VEC = _vector_consts()
@@ -339,83 +271,46 @@ def ppl_batch(texts, model=None) -> list[float]:
     ]
 
 
-def _enrich_batch_vector(htmls, texts, model) -> dict[str, list]:
-    import pyarrow as pa
-
-    n = len(htmls)
-    # --- extraction (precedence identical to the scalar loop) ----------
-    extract = textcore.extract_text
-    txts: list[str] = []
-    append = txts.append
-    for b, t in zip(htmls, texts):
-        if b is not None:
-            append(extract(bytes(b)))
-        elif isinstance(t, str):
-            append(t)
-        else:
-            append("")
-
-    arr = pa.array(txts, type=pa.string())
-    return _enrich_from_arr(arr, model)
-
-
 def _extract_arr(html_arr, text_arr):
     """Vectorized extraction: cast html binary -> string (validates
-    UTF-8; an invalid byte sequence anywhere returns None so the caller
-    takes the per-row ``extract_text`` path with its errors='replace'
-    semantics), strip tags with RE2 (``<[^>]*>`` — byte-equivalent to
-    the Python pattern), fall back to text-or-empty per row."""
+    UTF-8), strip tags with RE2 (``<[^>]*>`` — byte-equivalent to the
+    Python pattern), fall back to text-or-empty per row. An invalid
+    byte sequence anywhere sends the whole batch through the per-row
+    ``textcore.extract_text`` (its errors='replace' semantics)."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    empty = pa.scalar("", type=pa.string())
+    text = pc.coalesce(
+        text_arr.cast(pa.string()) if text_arr.type != pa.string()
+        else text_arr,
+        pa.scalar("", type=pa.string()),
+    )
     if html_arr.null_count == len(html_arr):
-        return pc.coalesce(
-            text_arr.cast(pa.string()) if text_arr.type != pa.string()
-            else text_arr,
-            empty,
-        )
+        return text
     try:
         html_str = html_arr.cast(pa.string())
     except pa.ArrowInvalid:
-        return None
+        extract = textcore.extract_text
+        return pa.array([
+            extract(b) if b is not None else t
+            for b, t in zip(html_arr.to_pylist(), text.to_pylist())
+        ], type=pa.string())
     stripped = pc.replace_substring_regex(
         html_str, pattern="<[^>]*>", replacement=""
     )
-    return pc.if_else(
-        pc.is_valid(html_arr),
-        stripped,
-        pc.coalesce(
-            text_arr.cast(pa.string()) if text_arr.type != pa.string()
-            else text_arr,
-            empty,
-        ),
-    )
+    return pc.if_else(pc.is_valid(html_arr), stripped, text)
 
 
 def enrich_batch_arrow(html_arr, text_arr):
     """Arrow-native enrich: (binary html array, string text array) ->
     pa.StructArray in ENRICH_COLS order — the ``arrow_udf`` entry (no
-    pandas on either side of the boundary) and the one enrich entry that
-    dispatches. Batches of every size take the vector path; html with
-    invalid UTF-8 bytes takes its per-row ``extract_text`` extraction;
-    swapped-in real models take the scalar loop (``_vector_ok``)."""
+    pandas on either side of the boundary). Batches of every size and
+    every model take the one kernel; html with invalid UTF-8 bytes
+    takes its per-row ``extract_text`` extraction."""
     from .model_loaders import get_fasttext
 
-    model = get_model()
-    ft = get_fasttext()
-    if not _vector_ok(model, ft):
-        cols = _enrich_batch_scalar(
-            html_arr.to_pylist(), text_arr.to_pylist(), model, ft
-        )
-        return _cols_to_struct(cols)
     arr = _extract_arr(html_arr, text_arr)
-    if arr is None:  # invalid UTF-8 somewhere: exact per-row semantics
-        cols = _enrich_batch_vector(
-            html_arr.to_pylist(), text_arr.to_pylist(), model
-        )
-        return _cols_to_struct(cols)
-    return _cols_to_struct(_enrich_from_arr(arr, model))
+    return _cols_to_struct(_enrich_from_arr(arr, get_model(), get_fasttext()))
 
 
 def _cols_to_struct(cols):
@@ -436,12 +331,14 @@ def _cols_to_struct(cols):
     )
 
 
-def _enrich_from_arr(arr, model) -> dict[str, list]:
-    """The vectorized kernel body over an extracted-text Arrow array.
-    Per-row Python strings are materialized ONLY for rows the scrub
-    gate or the dup-line eligibility mask route to the scalar helpers
-    (the ``not txt`` lang special case is equivalent to the letters==0
-    branch — empty text has no letters — so the loop needs no text)."""
+def _enrich_from_arr(arr, model, ft) -> dict[str, list]:
+    """The kernel body over an extracted-text Arrow array. With the
+    shipped models, per-row Python strings are materialized ONLY for
+    rows the scrub gate or the dup-line eligibility mask route to the
+    ``textcore`` helpers (the ``not txt`` lang special case is
+    equivalent to the letters==0 branch — empty text has no letters —
+    so the loop needs no text); a fastText ``ft`` or an LM without
+    ``perplexity_ids`` is called per doc (module docstring)."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -476,7 +373,9 @@ def _enrich_from_arr(arr, model) -> dict[str, list]:
     stopword_frac = np.divide(sw_cnt, nwf, out=np.zeros(n), where=nz)
 
     # --- perplexity: batched quantized-logprob sums (exact any-order) --
-    lp = _lp_sums(par, nw, ids, model, n)
+    # an LM without the id API scores per doc in the finishing loop
+    use_ids = hasattr(model, "perplexity_ids")
+    lp_l = _lp_sums(par, nw, ids, model, n).tolist() if use_ids else None
     top_bigram = np.zeros(n)
     if total_toks > 1:
         pair_ok = par[1:] == par[:-1]
@@ -528,7 +427,6 @@ def _enrich_from_arr(arr, model) -> dict[str, list]:
         arr, "[\\x1c-\\x1f]"
     ).to_numpy(zero_copy_only=False)
     dl_eligible = np.logical_and(doc_ascii, ~has_ctl)
-    dup_line_arr = np.zeros(n)
     line_list = pc.split_pattern(arr, "\n")
     lpar = pc.list_parent_indices(line_list).to_numpy()
     lflat = pc.list_flatten(line_list)
@@ -539,30 +437,32 @@ def _enrich_from_arr(arr, model) -> dict[str, list]:
     line_cnt = np.bincount(lpar2, minlength=n)
     ldenc = pc.dictionary_encode(ltrim)
     lcodes = ldenc.indices.to_numpy().astype(np.int64)
-    if len(ldenc.dictionary) < (1 << 40):
-        lkey = np.unique((lpar2 << 40) | lcodes)
-        uniq_cnt = np.bincount(lkey >> 40, minlength=n)
-        with np.errstate(invalid="ignore", divide="ignore"):
-            ratio = 1.0 - np.divide(
-                uniq_cnt.astype(np.float64), line_cnt,
-                out=np.ones(n), where=line_cnt > 0,
-            )
-        dup_line_arr = np.where(line_cnt > 0, ratio, 0.0)
-    else:  # pragma: no cover — >2^40 distinct lines cannot happen
-        dl_eligible = np.zeros(n, dtype=bool)
+    # int32 dictionary codes: the packed (doc, line) key cannot collide
+    lkey = np.unique((lpar2 << 40) | lcodes)
+    uniq_cnt = np.bincount(lkey >> 40, minlength=n)
+    with np.errstate(invalid="ignore", divide="ignore"):
+        ratio = 1.0 - np.divide(
+            uniq_cnt.astype(np.float64), line_cnt,
+            out=np.ones(n), where=line_cnt > 0,
+        )
     dl_eligible_l = dl_eligible.tolist()
-    dup_line_l = dup_line_arr.tolist()
+    dup_line_l = np.where(line_cnt > 0, ratio, 0.0).tolist()
 
-    # --- per-row text materialized ONLY where the scalar helpers run --
-    sel = np.flatnonzero(np.asarray(need_scrub, dtype=bool) | ~dl_eligible)
-    txt_by_i = (
-        dict(zip(sel.tolist(), arr.take(pa.array(sel)).to_pylist()))
-        if len(sel) else {}
-    )
+    # --- per-row text: every row while a model hook is active, else
+    # only the rows the textcore scrub / dup-line helpers read ---------
+    if ft is not None or not use_ids:
+        txt_by_i = arr.to_pylist()
+    else:
+        sel = np.flatnonzero(
+            np.asarray(need_scrub, dtype=bool) | ~dl_eligible
+        )
+        txt_by_i = (
+            dict(zip(sel.tolist(), arr.take(pa.array(sel)).to_pylist()))
+            if len(sel) else {}
+        )
 
     # --- per-doc finishing loop (cheap scalar arithmetic only) ---------
     nw_l = nw.tolist()
-    lp_l = lp.tolist()
     sw_l = sw_cnt.tolist()
     iv_l = iv_cnt.tolist()
 
@@ -597,7 +497,11 @@ def _enrich_from_arr(arr, model) -> dict[str, list]:
         ccjk = cjk_l[i]
         cdeva = deva_l[i]
         letters = latin + ccyr + ccjk + cdeva
-        if letters == 0:
+        if ft is not None:  # fastText langid hook
+            lang, conf = ft.predict_lang(txt_by_i[i])
+            ap_lang(lang)
+            ap_conf(conf)
+        elif letters == 0:
             ap_lang("unk")
             ap_conf(0.0)
         else:
@@ -621,7 +525,9 @@ def _enrich_from_arr(arr, model) -> dict[str, list]:
                 ap_lang("unk")
                 ap_conf(round(latin / letters, 6))
         # perplexity finishing (math.exp + round per doc for bit parity)
-        if nw_i < 2:
+        if lp_l is None:  # LM hook (no id API)
+            ap_ppl(model.perplexity(txt_by_i[i]))
+        elif nw_i < 2:
             ap_ppl(1.0)
         else:
             ap_ppl(float(round(exp(-lp_l[i] / (nw_i - 1)), 6)))

@@ -33,6 +33,9 @@ against tiny checked-in fixtures (tests/fixtures/):
 The langid seam: ``get_fasttext()`` returns a per-worker singleton when
 ``DQ_SPARK_FASTTEXT`` names a ``.bin`` — the enrich kernel then uses
 the model's prediction instead of the heuristic ``textcore.lang_id``.
+Both seams are per-doc hooks inside the one vectorized enrich kernel
+(``kernel._enrich_from_arr``): every stage a model does not replace
+still runs over the whole Arrow batch.
 
 No network, no bundled binaries: fixtures are a ~20-line hand-written
 ARPA file and .bin files synthesized by the tests.
@@ -40,7 +43,6 @@ ARPA file and .bin files synthesized by the tests.
 
 from __future__ import annotations
 
-import math
 import struct
 from dataclasses import dataclass
 

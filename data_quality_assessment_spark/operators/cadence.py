@@ -22,7 +22,7 @@ boundaries) with a single unpartitioned window — fixture-scale only.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 

@@ -175,9 +175,10 @@ def extracted_text_col() -> Column:
 
 def materialize_scrubbed(df: DataFrame) -> DataFrame:
     """Fill the NULL-means-unchanged ``scrubbed_text`` convention back to
-    full text (the kernel's output convention, defined in
-    ``kernel._enrich_batch_scalar``): NULL rows get the extracted text
-    via the native twin — JVM-side codegen, no second Python pass.
+    full text (the kernel's output convention, defined in the
+    ``functions/kernel.py`` module docstring): NULL rows get the
+    extracted text via the native twin — JVM-side codegen, no second
+    Python pass.
     Call this only at sinks that must ship the bytes; inside the DAG the
     NULL form keeps the Arrow/shuffle/parquet footprint near zero on
     clean web text. Requires the html/text source columns still present

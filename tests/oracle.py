@@ -2,7 +2,9 @@
 quality DAG and (b) the reference's six IoT metrics with quirks Q1-Q9.
 
 (a) validates the Spark PLUMBING (Arrow UDF batching, native-Column twins,
-window dedup, distribution) against a straight-line pandas run. The
+window dedup, distribution) against a straight-line pandas run;
+``oracle_enrich`` is the per-doc enrich reference the vectorized kernel
+is pinned to (tests/test_kernel_parity.py). The
 per-row kernels (langid / ppl / scrub) are intentionally the same
 ``textcore``/``lm`` modules — byte-identical scrubbed text is the contract
 (BASELINE.json input_hint) — while the heuristic stats are an independent
@@ -57,6 +59,44 @@ def oracle_dedup(df: pd.DataFrame) -> pd.DataFrame:
     d = d.sort_values(["url", "_ts_key", "_tb", "_tb2"], kind="mergesort")
     d = d.drop_duplicates(subset=["url", "_ts_key"], keep="first")
     return d.drop(columns=["_tb", "_tb2", "_ts_key"])
+
+
+def oracle_enrich(html, text, model=None, ft=None) -> dict:
+    """One doc's 14 enrich columns as the unfused composition of the
+    public per-doc functions — the reference ``kernel.enrich_batch_arrow``
+    is pinned to. ``model`` defaults to ``lm.get_model()``; a fastText
+    ``ft`` replaces the heuristic langid, as the kernel's hooks do."""
+    if html is not None:
+        txt = textcore.extract_text(bytes(html))
+    elif isinstance(text, str):
+        txt = text
+    else:
+        txt = ""
+    model = model if model is not None else get_model()
+    toks = textcore.tokenize(txt)
+    lang, conf = (
+        ft.predict_lang(txt) if ft is not None
+        else textcore.lang_id(txt, toks)
+    )
+    scrubbed, c = textcore.scrub_text(txt)
+    nw = len(toks)
+    return {
+        "lang_pred": lang,
+        "lang_conf": conf,
+        "ppl": model.perplexity(txt, toks),
+        "top_bigram_share": textcore.top_bigram_share(txt, toks),
+        # NULL-means-unchanged convention (kernel.py docstring)
+        "scrubbed_text": scrubbed if any(c.values()) else None,
+        "pii_email": c["pii_email"],
+        "pii_ip": c["pii_ip"],
+        "pii_phone": c["pii_phone"],
+        "toxicity_slur": c["toxicity_slur"],
+        "nw": nw,
+        "mean_wl": textcore.mean_word_len(txt),
+        "symbol_ratio": textcore.symbol_word_ratio(txt),
+        "stopword_frac": textcore.stopword_frac(txt),
+        "dup_line_frac": textcore.dup_line_frac(txt),
+    }
 
 
 def oracle_pipeline(

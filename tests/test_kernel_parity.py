@@ -1,8 +1,10 @@
 """Fused-kernel equivalence (no Spark): ``kernel.enrich_batch`` must
-produce EXACTLY the per-doc function composition for arbitrary input —
-the fused kernel shares tokenization/ids across stages, and this pins
-that the sharing changes nothing (hypothesis over unicode text,
-PII-bearing strings, and the fixture corpus)."""
+produce EXACTLY the per-doc function composition
+(``tests.oracle.oracle_enrich``) for arbitrary input and every batch
+size — the fused kernel shares tokenization/ids across stages and
+vectorizes them over the batch, and this pins that the sharing changes
+nothing (hypothesis over unicode text, PII-bearing strings, and the
+fixture corpus)."""
 
 from __future__ import annotations
 
@@ -10,6 +12,7 @@ import pytest
 
 from data_quality_assessment_spark.functions import kernel, textcore
 from data_quality_assessment_spark.functions.lm import get_model
+from tests.oracle import oracle_enrich
 
 try:
     from hypothesis import given, settings, strategies as st
@@ -18,40 +21,9 @@ except ImportError:  # pragma: no cover
     HAVE_HYP = False
 
 
-def _reference_enrich(html, text):
-    """The unfused composition of the public per-doc functions."""
-    if html is not None:
-        txt = textcore.extract_text(bytes(html))
-    elif isinstance(text, str):
-        txt = text
-    else:
-        txt = ""
-    toks = textcore.tokenize(txt)
-    lang, conf = textcore.lang_id(txt, toks)
-    scrubbed, c = textcore.scrub_text(txt)
-    nw = len(toks)
-    return {
-        "lang_pred": lang,
-        "lang_conf": conf,
-        "ppl": get_model().perplexity(txt, toks),
-        "top_bigram_share": textcore.top_bigram_share(txt, toks),
-        # NULL-means-unchanged convention (kernel.py docstring)
-        "scrubbed_text": scrubbed if any(c.values()) else None,
-        "pii_email": c["pii_email"],
-        "pii_ip": c["pii_ip"],
-        "pii_phone": c["pii_phone"],
-        "toxicity_slur": c["toxicity_slur"],
-        "nw": nw,
-        "mean_wl": textcore.mean_word_len(txt),
-        "symbol_ratio": textcore.symbol_word_ratio(txt),
-        "stopword_frac": textcore.stopword_frac(txt),
-        "dup_line_frac": textcore.dup_line_frac(txt),
-    }
-
-
 def _assert_match(html, text):
     cols = kernel.enrich_batch([html], [text])
-    want = _reference_enrich(html, text)
+    want = oracle_enrich(html, text)
     for k, v in want.items():
         assert cols[k][0] == v, (k, text)
 
@@ -94,31 +66,33 @@ def test_kernel_on_fixture_corpus():
     pdf = gen_pages_fast(500, seed=99)
     cols = kernel.enrich_batch(list(pdf["html"]), list(pdf["text"]))
     for i in (0, 123, 499):
-        want = _reference_enrich(pdf["html"][i], pdf["text"][i])
+        want = oracle_enrich(pdf["html"][i], pdf["text"][i])
         for k, v in want.items():
             assert cols[k][i] == v, (i, k)
 
 
 # ---------------------------------------------------------------------------
-# vectorized fast path vs scalar reference (r6 optimization): the batch
-# path must be BIT-identical to the per-doc loop for arbitrary input
+# whole batches: the vectorized kernel must be BIT-identical to the
+# per-doc composition for arbitrary input
 # ---------------------------------------------------------------------------
 
 
+def _assert_cols_match(cols, htmls, texts, model=None, ft=None):
+    """{column: list} from the kernel == ``oracle_enrich`` row by row."""
+    ref = [oracle_enrich(h, t, model, ft) for h, t in zip(htmls, texts)]
+    for k in kernel.ENRICH_COLS:
+        got = list(cols[k])
+        assert len(got) == len(ref)
+        for i, (want, y) in enumerate(zip(ref, got)):
+            x = want[k]
+            ok = (x == y) or (x is None and y is None)
+            assert ok, (k, i, x, y, repr(texts[i])[:120])
+
+
 def _assert_batch_parity(htmls, texts):
-    """Scalar reference == the vector body and == the dispatching entry
-    (Arrow extraction included) for a batch of any size."""
-    ref = kernel._enrich_batch_scalar(htmls, texts)
-    for fast in (
-        kernel._enrich_batch_vector(htmls, texts, get_model()),
-        kernel.enrich_batch(htmls, texts),
-    ):
-        for k in kernel.ENRICH_COLS:
-            a, b = list(ref[k]), list(fast[k])
-            assert len(a) == len(b)
-            for i, (x, y) in enumerate(zip(a, b)):
-                ok = (x == y) or (x is None and y is None)
-                assert ok, (k, i, x, y, repr(texts[i])[:120])
+    """The per-doc reference == the entry (Arrow extraction included)
+    for a batch of any size."""
+    _assert_cols_match(kernel.enrich_batch(htmls, texts), htmls, texts)
 
 
 EDGE_TEXTS = [
@@ -188,17 +162,6 @@ def test_vector_batch_parity_hypothesis(texts):
     _assert_batch_parity([None] * len(texts), texts)
 
 
-def test_default_models_take_vector_path():
-    """The shipped BigramLM without a fastText model dispatches to the
-    vector path; only swapped-in real models (test_model_loaders) take
-    the scalar loop."""
-    from data_quality_assessment_spark.functions.model_loaders import (
-        get_fasttext,
-    )
-
-    assert kernel._vector_ok(get_model(), get_fasttext())
-
-
 def test_empty_batch():
     """0-row batches (empty partitions) return 0-length columns of the
     struct types the UDF declares."""
@@ -256,7 +219,7 @@ def test_ppl_batch_matches_perplexity():
 
 def test_arrow_batch_parity():
     """r6: the Arrow-native entry (enrich_batch_arrow) must match the
-    scalar reference bit-for-bit, including the vectorized html
+    per-doc reference bit-for-bit, including the vectorized html
     extraction and its invalid-UTF-8 whole-batch fallback."""
     import pyarrow as pa
 
@@ -268,13 +231,88 @@ def test_arrow_batch_parity():
     # splice in edge rows: invalid utf-8 html, empty html, html None+text
     htmls += [b"<html><body>\xff\xfebroken</body></html>", b"", None, None]
     texts += [None, None, "plain text row", None]
-    ref = kernel._enrich_batch_scalar(htmls, texts)
     st = kernel.enrich_batch_arrow(
         pa.array(htmls, type=pa.binary()), pa.array(texts, type=pa.string())
     )
-    for k in kernel.ENRICH_COLS:
-        got = st.field(k).to_pylist()
-        want = list(ref[k])
-        for i, (x, y) in enumerate(zip(want, got)):
-            ok = (x == y) or (x is None and y is None)
-            assert ok, (k, i, x, y)
+    cols = {k: st.field(k).to_pylist() for k in kernel.ENRICH_COLS}
+    _assert_cols_match(cols, htmls, texts)
+
+
+# ---------------------------------------------------------------------------
+# swapped-in real models: the kernel's per-doc hooks at batch scale
+# ---------------------------------------------------------------------------
+
+
+def _mixed_corpus():
+    """Fixture pages plus the extraction edges: invalid-UTF-8 html, empty
+    html, null html and text, and a Cyrillic row with an IPv4 address."""
+    from data_quality_assessment_spark.sources.fixture_gen import gen_pages_fast
+
+    pdf = gen_pages_fast(600, seed=21)
+    htmls = [bytes(b) if b is not None else None for b in pdf["html"]]
+    texts = list(pdf["text"])
+    htmls += [b"<html><body>\xff\xfe the cat</body></html>", b"", None,
+              None, None, None]
+    texts += [None, None, None, "the cat sat on the mat", "",
+              "Привет мир the cat 10.0.0.1 sat"]
+    return htmls, texts
+
+
+def _write_langid_bin(path):
+    """A small supervised fastText .bin over the kernel's vocabulary, so
+    docs get model-specific labels and confidences."""
+    import numpy as np
+
+    from tests.test_model_loaders import _write_ft_bin
+
+    words = list(textcore.VOCAB[:40]) + ["</s>"]
+    labels = ["__label__en", "__label__fr", "__label__de"]
+    rng = np.random.RandomState(7)
+    im = rng.randn(len(words), 4)
+    om = rng.randn(len(labels), 4)
+    _write_ft_bin(path, words, labels, im, om, dim=4)
+
+
+@pytest.mark.parametrize("with_ft", [False, True])
+def test_model_hooks_at_batch_scale(tmp_path, monkeypatch, with_ft):
+    """With the ARPA LM (and optionally a fastText langid) swapped in,
+    ``enrich_batch_arrow`` equals the per-doc composition over the mixed
+    corpus at 1-, 7- and 4096-row batches; ``ppl_batch`` equals the ARPA
+    model's per-doc perplexity."""
+    import pyarrow as pa
+
+    from data_quality_assessment_spark.functions import model_loaders as ml
+    from tests.test_model_loaders import ARPA
+
+    monkeypatch.setenv("DQ_SPARK_LM_ARPA", ARPA)
+    monkeypatch.setattr(ml, "_FT_SINGLETON", None)
+    monkeypatch.setattr(ml, "_FT_SINGLETON_PATH", None)
+    if with_ft:
+        p = tmp_path / "lid.bin"
+        _write_langid_bin(p)
+        monkeypatch.setenv("DQ_SPARK_FASTTEXT", str(p))
+    else:
+        monkeypatch.delenv("DQ_SPARK_FASTTEXT", raising=False)
+    model, ft = get_model(), ml.get_fasttext()
+    assert isinstance(model, ml.ArpaLM)
+    assert (ft is not None) == with_ft
+
+    htmls, texts = _mixed_corpus()
+    for rows in (1, 7, 4096):
+        cols = {k: [] for k in kernel.ENRICH_COLS}
+        for lo in range(0, len(htmls), rows):
+            st = kernel.enrich_batch_arrow(
+                pa.array(htmls[lo:lo + rows], type=pa.binary()),
+                pa.array(texts[lo:lo + rows], type=pa.string()),
+            )
+            for k in kernel.ENRICH_COLS:
+                cols[k] += st.field(k).to_pylist()
+        _assert_cols_match(cols, htmls, texts, model, ft)
+    if with_ft:  # the model's labels, not the heuristic's, reach the output
+        assert {"fr", "de"} <= set(cols["lang_pred"])
+
+    ppl_texts = texts + EDGE_TEXTS
+    got = kernel.ppl_batch(ppl_texts)
+    for t, g in zip(ppl_texts, got):
+        txt = t if isinstance(t, str) else ""
+        assert g == model.perplexity(txt, textcore.tokenize(txt)), repr(t)

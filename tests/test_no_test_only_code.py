@@ -8,6 +8,11 @@ definition. A name nothing ships is dead weight the tests keep alive;
 delete it, or move a reference implementation the tests need into
 ``tests/oracle.py``. Dunder names (``__version__``) are read by Python
 and packaging tools, not by identifier, and are not checked.
+
+Every name a package module imports must be used in that module: it
+must appear as a ``Name`` node (which includes the base of an
+attribute chain such as ``np.zeros``). ``from __future__`` imports are
+compiler directives and are exempt.
 """
 
 from __future__ import annotations
@@ -63,3 +68,26 @@ def test_every_package_symbol_has_a_non_test_use():
         "package symbols reached only by tests (delete them, or move "
         "test-only helpers into tests/):\n  " + "\n  ".join(unused)
     )
+
+
+def _imported_names(tree: ast.Module):
+    """(bound name, line) of each import in the module, at any depth."""
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            for alias in node.names:
+                yield alias.asname or alias.name.split(".")[0], node.lineno
+        elif (isinstance(node, ast.ImportFrom)
+              and node.module != "__future__"):
+            for alias in node.names:
+                yield alias.asname or alias.name, node.lineno
+
+
+def test_every_package_import_is_used():
+    unused = []
+    for f in sorted(PACKAGE.rglob("*.py")):
+        tree = ast.parse(f.read_text())
+        used = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+        unused += [f"{f.relative_to(ROOT)}:{line} {name}"
+                   for name, line in _imported_names(tree)
+                   if name not in used]
+    assert not unused, "unused imports:\n  " + "\n  ".join(unused)
