@@ -1632,29 +1632,19 @@ FROM documents
 
 
 def q_ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact top-10 neighbours of the first embedding
+    (``similarity.cosine_topk``): ranked on the unrounded cosine, then
+    vec_id, exactly as ORACLE_ANN ranks, and rounded only on output."""
+    from data_quality_assessment_spark.operators import similarity as sim
+
     e = _load(spark, sf_dir, "embeddings")
     q = (
         e.orderBy("vec_id")
         .limit(1)
-        .select(F.col("vec_id").alias("qid"), F.col("embedding").alias("qv"))
+        .select(F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec"))
     )
-    # r6: query-side norm precomputed on the one-row broadcast side
-    # (cosine_prenorm) — the flat-codegen cosine otherwise recomputes
-    # the constant sqrt(sum qv^2) chain per corpus row; bit-identical
-    from data_quality_assessment_spark.operators.similarity import (
-        cosine_prenorm, vec_norm,
-    )
-
-    q = q.withColumn("_qn", vec_norm(F.col("qv"), _LSH_DIM))
-    cos = cosine_prenorm(
-        F.col("embedding"), F.col("qv"), F.col("_qn"), dim=_LSH_DIM
-    )
-    return (
-        e.crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != F.col("qid"))
-        .select("vec_id", F.round(cos, 4).alias("cos"))
-        .orderBy(F.desc("cos"), F.asc("vec_id"))
-        .limit(10)
+    return sim.cosine_topk(e, q, k=10).select(
+        "vec_id", F.round("cos", 4).alias("cos")
     )
 
 
@@ -1678,32 +1668,22 @@ SELECT vec_id, round(c, 4) AS cos FROM s ORDER BY c DESC, vec_id LIMIT 10
 
 
 def q_ann_cosine_topk_hd(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """High-dim (256) exact top-k through the VECTORIZED kernel
-    (``operators/similarity.py`` dim gate): the 64-dim test embeddings
-    are deterministically tiled 4x in BOTH engines, so the oracle checks
-    the Arrow/numpy fold path — the one a 768+-dim production corpus
-    takes — not the literal-expression plan."""
-    from data_quality_assessment_spark.operators.similarity import (
-        VEC_UDF_DIM_THRESHOLD, cosine,
-    )
+    """High-dim (256) exact top-k: the 64-dim test embeddings are
+    deterministically tiled 4x in BOTH engines, so the oracle checks the
+    similarity kernel at a width nearer a production corpus (768+) than
+    the 64-dim queries."""
+    from data_quality_assessment_spark.operators import similarity as sim
 
-    dim = 4 * _LSH_DIM
-    assert dim >= VEC_UDF_DIM_THRESHOLD  # the gate must route to numpy
     e = _load(spark, sf_dir, "embeddings").withColumn(
         "hd", F.flatten(F.array_repeat(F.col("embedding"), 4))
     )
     q = (
         e.orderBy("vec_id")
         .limit(1)
-        .select(F.col("vec_id").alias("qid"), F.col("hd").alias("qv"))
+        .select(F.col("vec_id").alias("q_id"), F.col("hd").alias("q_vec"))
     )
-    cos = cosine(F.col("hd"), F.col("qv"), dim)
-    return (
-        e.crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != F.col("qid"))
-        .select("vec_id", F.round(cos, 4).alias("cos"))
-        .orderBy(F.desc("cos"), F.asc("vec_id"))
-        .limit(10)
+    return sim.cosine_topk(e, q, k=10, vec_col="hd").select(
+        "vec_id", F.round("cos", 4).alias("cos")
     )
 
 
@@ -1789,9 +1769,7 @@ def q_cosine_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_quality_assessment_spark.operators import similarity as sim
 
     e = _load(spark, sf_dir, "embeddings")
-    return sim.cosine_near_dup_pairs(
-        e, "vec_id", "embedding", "label", 0.25, dim=_LSH_DIM
-    )
+    return sim.cosine_near_dup_pairs(e, "vec_id", "embedding", "label", 0.25)
 
 
 ORACLE_COSINE_NEAR_DUP = """
@@ -2007,10 +1985,9 @@ def q_lsh_signature(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_quality_assessment_spark.operators import similarity as sim
 
     e = _load(spark, sf_dir, "embeddings")
-    return e.select(
-        "vec_id",
-        sim.lsh_signature(F.col("embedding"), _LSH_DIM, _LSH_PLANES).alias("sig"),
-    )
+    return sim.with_lsh_signature(
+        e, "embedding", _LSH_DIM, _LSH_PLANES
+    ).select("vec_id", "sig")
 
 
 def _sql_lsh_bits() -> str:
@@ -2110,8 +2087,9 @@ def _oracle_ann_ivf_topk() -> str:
     cb = ivf_codebook(_IVF_CENTROIDS, _LSH_DIM)
 
     def dot_sql(prefix: str, cent: list[float]) -> str:
-        # identical term set and fold order as _dot_literal (zero
-        # weights skipped there, so skipped here)
+        # left-to-right fold, as the similarity kernel sums; the
+        # kernel's zero-weight terms add ±0.0, which leaves a finite
+        # sum unchanged, so skipping them here gives the same dots
         return " + ".join(
             f"{prefix}[{i + 1}]::DOUBLE * ({w})"
             for i, w in enumerate(cent) if w != 0.0

@@ -13,12 +13,16 @@ second implementation of the pinned tokenization spec.
 (b) re-derives the reference semantics exactly as cited in SURVEY.md §2;
 this implementation path was validated against both golden reports
 (suratITMS / puneAQM) during the survey.
+
+(c) the similarity kernel's arithmetic in plain Python floats
+(``operators/similarity.py`` is pinned to it bit for bit).
 """
 
 from __future__ import annotations
 
 import hashlib
 import json
+import math
 from dataclasses import dataclass
 
 import numpy as np
@@ -288,3 +292,30 @@ def oracle_six_metrics(
     out = oracle_outliers(iat)
     fmt, unk, comp = oracle_schema_metrics(df, required, known)
     return SixMetrics(dupe, reg, out, round(fmt, 4), round(unk, 4), comp)
+
+
+# ---------------------------------------------------------------------------
+# (c) similarity kernel reference
+# ---------------------------------------------------------------------------
+
+
+def _fold(terms) -> float:
+    """Left-to-right sum starting from the first term (no 0.0 seed)."""
+    it = iter(terms)
+    acc = next(it)
+    for t in it:
+        acc += t
+    return acc
+
+
+def oracle_cosine(a, b) -> float:
+    """dot / (sqrt(na) * sqrt(nb)), each sum a left-to-right fold."""
+    dot = _fold(x * y for x, y in zip(a, b))
+    na = _fold(x * x for x in a)
+    nb = _fold(y * y for y in b)
+    return dot / (math.sqrt(na) * math.sqrt(nb))
+
+
+def oracle_plane_dots(vec, weights) -> list[float]:
+    """dot(vec, w) for every weight row w, each a left-to-right fold."""
+    return [_fold(x * w for x, w in zip(vec, row)) for row in weights]

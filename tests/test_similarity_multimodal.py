@@ -70,12 +70,12 @@ def test_lsh_topk_recall(spark, vectors):
 
 
 def test_lsh_signature_deterministic(spark, vectors):
-    a = vectors.select(
-        sim.lsh_signature(F.col("embedding"), DIM, 8).alias("s")
-    ).collect()
-    b = vectors.select(
-        sim.lsh_signature(F.col("embedding"), DIM, 8).alias("s")
-    ).collect()
+    def sigs():
+        return sim.with_lsh_signature(
+            vectors, "embedding", DIM, 8, "s"
+        ).orderBy("vec_id").collect()
+
+    a, b = sigs(), sigs()
     assert [r.s for r in a] == [r.s for r in b]
     assert any(r.s != a[0].s for r in a)  # not degenerate
 
@@ -162,10 +162,20 @@ def test_ivf_topk_recall_and_partition(spark, vectors):
 
 
 def test_ivf_trained_codebook_seam(spark, vectors):
-    """The pyspark.ml KMeans-trained codebook drops into the same plan
-    (production path); with k = number of true clusters the trained
-    cells should give high recall at small nprobe."""
-    cb = sim.train_ivf_codebook(vectors, n_centroids=4)
+    """A pyspark.ml KMeans-trained codebook drops into the same plan
+    (production path: train on a sample, pass plain lists); with k =
+    number of true clusters the trained cells should give high recall
+    at small nprobe."""
+    from pyspark.ml.clustering import KMeans
+    from pyspark.ml.functions import array_to_vector
+
+    feats = vectors.select(
+        array_to_vector(
+            F.transform("embedding", lambda x: x.cast("double"))
+        ).alias("features")
+    )
+    model = KMeans(k=4, seed=42, maxIter=20).fit(feats)
+    cb = [list(map(float, c)) for c in model.clusterCenters()]
     assert len(cb) == 4 and len(cb[0]) == DIM
     queries = vectors.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
