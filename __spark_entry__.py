@@ -777,11 +777,20 @@ SELECT iat_s AS mode FROM c ORDER BY cnt DESC, iat_s ASC LIMIT 1
 """
 
 
-def q_iat_regularity(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _user_iat_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-user IAT scores over whole-second IATs (A7/A8 kernel)."""
     d = _events_iat(spark, sf_dir).select(
         "user_id", F.floor("iat").cast("double").alias("iat")
     )
-    return cadence.regularity_score(d, "iat", ["user_id"])
+    return cadence.iat_freq_scores(d, ["user_id"])
+
+
+def q_iat_regularity(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """A8 per user; users whose modal IAT is 0 have no defined relative
+    error and no row."""
+    return _user_iat_scores(spark, sf_dir).filter(
+        F.col("regularity").isNotNull()
+    ).select("user_id", F.round("regularity", 6).alias("reg_score"))
 
 
 ORACLE_IAT_REG = f"""
@@ -807,10 +816,9 @@ FROM r GROUP BY user_id
 
 
 def q_iat_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _events_iat(spark, sf_dir).select(
-        "user_id", F.floor("iat").cast("double").alias("iat")
+    return _user_iat_scores(spark, sf_dir).select(
+        "user_id", F.round("outliers", 6).alias("out_score")
     )
-    return cadence.outlier_score(d, "iat", ["user_id"])
 
 
 ORACLE_IAT_OUT = f"""
@@ -885,7 +893,8 @@ FROM dev, mm
 
 def q_host_cadence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The north_star's per-host crawl-cadence over PAGES (reference IAT
-    regularity/outlier math per url host — plans/pipeline.host_cadence):
+    regularity/outlier math per url host — plans/pipeline.host_cadence,
+    the plain host-partitioned lag scored by cadence.iat_freq_scores):
     one row per host with page count + both cadence scores."""
     pages = _pages(spark, sf_dir)
     return pipeline.host_cadence(pages)
@@ -938,12 +947,11 @@ FROM n LEFT JOIN r ON n.host = r.host LEFT JOIN o ON n.host = o.host
 
 def q_host_cadence_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Skew-safe twin of host_cadence
-    (plans/pipeline.host_cadence_salted): the aggregation-shaped plan —
-    (host, time-bucket) lag windows, partial-agg mode, weighted-median
-    MAD — must produce IDENTICAL rows, so it is checked against the
-    SAME oracle SQL. Bucket width 600s splits the fixture's ~N-second
-    host timelines into many buckets, exercising the boundary-diff
-    path."""
+    (plans/pipeline.host_cadence_salted): (host, time-bucket) lag
+    windows feeding the same IAT-score kernel — must produce IDENTICAL
+    rows, so it is checked against the SAME oracle SQL. Bucket width
+    600s splits the fixture's ~N-second host timelines into many
+    buckets, exercising the boundary-diff path."""
     pages = _pages(spark, sf_dir)
     return pipeline.host_cadence_salted(pages, ts_bucket_sec=600)
 
@@ -1709,14 +1717,15 @@ SELECT vec_id, round(c, 4) AS cos FROM s ORDER BY c DESC, vec_id LIMIT 10
 
 
 def q_cadence_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """W2 grouped-map applyInPandas path — same semantics as the columnar
-    reg/outlier scores (oracle identical shape)."""
-    d = _events_iat(spark, sf_dir).select(
-        "user_id", F.floor("iat").cast("double").alias("iat")
-    )
-    return cadence.cadence_stats_pandas(d, "user_id").select(
+    """W2's per-user mode / MAD / regularity / outlier row (the reference's
+    grouped apply, ``metricModules.py:41-44``), all from the one IAT-score
+    kernel. The name is kept from the grouped-map applyInPandas twin this
+    query used to run; ``winnow.exact_substring_removal`` is the package's
+    grouped-map path."""
+    return _user_iat_scores(spark, sf_dir).select(
         "user_id", "n", "mode", F.round("mad", 6).alias("mad"),
-        "reg_score", "out_score",
+        F.round("regularity", 6).alias("reg_score"),
+        F.round("outliers", 6).alias("out_score"),
     )
 
 

@@ -14,10 +14,14 @@ keep IAT>=0 (zeros kept, Q2), then
     ties -> smallest (Q3). Spark's ``mode()`` does not pin tie order, so we
     use ``min(struct(-count, value))`` — one extra shuffle, deterministic.
 
-Scale notes: everything is two passes over a (entity, ts)-partitioned
-shuffle; per-entity state never materializes on the driver. Parity mode
-(``global_order=True``) reproduces quirk Q1 (the lag that crosses entity
-boundaries) with a single unpartitioned window — fixture-scale only.
+:func:`iat_freq_scores` is the one implementation of mode, MAD,
+regularity and the outlier share: the report, the per-user queries and
+both host cadences call it. Scale notes: it collapses the IAT rows to a
+per-(entity, iat) frequency table behind one exchange, so per-entity
+state never materializes on the driver and the raw-row lag runs once.
+Parity mode (``global_order=True``) reproduces quirk Q1 (the lag that
+crosses entity boundaries) with a single unpartitioned window —
+fixture-scale only.
 """
 
 from __future__ import annotations
@@ -72,51 +76,64 @@ def mode_smallest(df: DataFrame, value: str, group: list[str] | None = None) -> 
     return out.select(*group, F.col("_m.v").alias("mode"))
 
 
-def _join_stat(
-    df: DataFrame, stat: DataFrame, group: list[str],
-    broadcast: bool | None = None,
-) -> DataFrame:
+def _join_stat(df: DataFrame, stat: DataFrame, group: list[str]) -> DataFrame:
     """Join per-group stats (one row per group) back onto the rows.
 
-    ``broadcast=None`` (default): NO static hint — the stat side is the
-    output of an aggregation whose cardinality equals the group count,
-    which the driver cannot know; at CC scale hosts ~ 10^8 rows and an
-    unconditional broadcast OOMs the executors (VERDICT r1). AQE sees the
-    stat side's ACTUAL size at runtime and converts to broadcast-hash
-    when it is under ``spark.sql.autoBroadcastJoinThreshold``, else keeps
-    a shuffled join with skew splitting — the size gate for free, at the
-    right place. ``broadcast=True`` forces the hint for sides the caller
-    KNOWS are small. The global (no-group) case is one row by
-    construction and always broadcasts.
+    NO static broadcast hint for a grouped stat: its cardinality equals
+    the group count, which the driver cannot know; at CC scale hosts ~
+    10^8 rows and an unconditional broadcast OOMs the executors (VERDICT
+    r1). AQE sees the stat side's ACTUAL size at runtime and converts to
+    broadcast-hash when it is under
+    ``spark.sql.autoBroadcastJoinThreshold``, else keeps a shuffled join
+    with skew splitting — the size gate for free, at the right place.
+    The global (no-group) case is one row by construction and always
+    broadcasts.
     """
     if group:
-        s = F.broadcast(stat) if broadcast else stat
-        return df.join(s, group)
+        return df.join(stat, group)
     return df.crossJoin(F.broadcast(stat))
 
 
-def iat_freq_scores(freq: DataFrame, group: list[str]) -> DataFrame:
-    """Mode, MAD, regularity (A8) and outlier score (A7) from a
-    ``(group…, iat, _c)`` frequency table of CLEAN IATs. Returns
-    ``[group…,] mode, mad, regularity, outliers``, unrounded.
+def iat_freq_scores(rows: DataFrame, group: list[str]) -> DataFrame:
+    """Mode, MAD, regularity (A8) and outlier score (A7) per group of
+    ``[group…, iat]`` rows; NULL ``iat`` is dropped (the reference's
+    dropna, P5). Returns ``[group…,] n, mode, mad, regularity,
+    outliers``, unrounded, where ``n`` is the clean IAT count.
 
     Every score depends only on the distinct iat value and its count,
-    so each is a frequency-weighted aggregate over the collapsed table:
-    mode is the ``min(struct(-count, iat))`` pick (ties -> smallest,
-    Q3); MAD is ``percentile(|iat - mode|, 0.5, count)`` — the same
-    Percentile aggregate ``F.median`` runs over the expanded rows;
-    regularity and the outlier share are weighted sums. Regularity is
-    NULL when the mode is 0 (no defined relative error); a group with
-    no clean IAT has no row (``group=[]``: one row of NULLs).
-    Row-level references: :func:`regularity_score` /
-    :func:`outlier_score`.
+    so the rows collapse to one ``(group…, iat, _c)`` frequency table
+    and each score is a frequency-weighted aggregate over it: mode is
+    the ``min(struct(-count, iat))`` pick (ties -> smallest, Q3); MAD is
+    ``percentile(|iat - mode|, 0.5, count)`` — the same Percentile
+    aggregate ``F.median`` runs over the expanded rows; regularity and
+    the outlier share are weighted sums. Regularity is NULL when the
+    mode is 0 (no defined relative error); a group with no clean IAT has
+    no row (``group=[]``: one row of NULLs).
+
+    The table is read three times (mode, MAD, scores).
+    ``repartition(*group, "iat")`` puts one exchange on top of it, which
+    the three references reuse, so the rows' upstream plan (sort, lag
+    window, partial aggregate) runs once. With a group, or in the
+    report's scale mode, it adds no shuffle: the aggregate's exchange
+    and the repartition are one; in the report's parity mode the
+    aggregate runs above the global lag's single partition, and this
+    exchange is what the references reuse instead of re-running the lag.
     """
+    freq = (
+        rows.filter(F.col("iat").isNotNull())
+        .groupBy(*group, "iat").agg(F.count(F.lit(1)).alias("_c"))
+        .repartition(*group, "iat")
+    )
     pick = F.min(F.struct((-F.col("_c")).alias("nc"), F.col("iat").alias("v")))
     mode = freq.groupBy(*group).agg(pick["v"].alias("mode"))
     dev = F.abs(F.col("iat") - F.col("mode"))
-    # mode rides along with MAD, so the last pass joins ONE stat row
+    # mode rides along with MAD, so the last pass joins ONE stat row.
+    # max_by, not first: the mode is one value per group either way, but
+    # reading _c keeps this read of the table identical to the others
+    # when a caller drops mad (q_iat_regularity); otherwise column
+    # pruning strips the count here and the exchange is not reused.
     stat = _join_stat(freq, mode, group).groupBy(*group).agg(
-        F.first("mode").alias("mode"),
+        F.max_by("mode", "_c").alias("mode"),
         F.percentile(dev, F.lit(0.5), F.col("_c")).alias("mad"),
     )
     j = _join_stat(freq, stat, group)
@@ -129,106 +146,12 @@ def iat_freq_scores(freq: DataFrame, group: list[str]) -> DataFrame:
     # one-sided mod-z > 3.5 (Q4); NULL modz (mad == 0) is no outlier
     nout = F.sum(F.when((F.col("mad") > 0) & (modz > 3.5), c).otherwise(F.lit(0.0)))
     return j.groupBy(*group).agg(
+        F.sum("_c").alias("n"),
         F.first("mode").alias("mode"),
         F.first("mad").alias("mad"),
         F.try_divide(good, cnt + bad).alias("regularity"),
         (1 - nout / F.sum(c)).alias("outliers"),
     )
-
-
-def regularity_score(
-    df: DataFrame, iat_col: str = "iat", group: list[str] | None = None
-) -> DataFrame:
-    """A8 as pure columnar aggregation. Returns [group cols,] reg_score."""
-    group = group or []
-    clean = df.filter(F.col(iat_col).isNotNull())
-    # groups whose modal IAT is 0 (duplicate timestamps dominate) have no
-    # defined relative error — excluded from the output (ANSI-safe: Spark 4
-    # raises on division by zero rather than returning NULL)
-    m = mode_smallest(clean, iat_col, group).filter(F.col("mode") != 0)
-    j = _join_stat(clean, m, group)
-    rae = F.abs(F.col(iat_col) - F.col("mode")) / F.col("mode")
-    good = F.sum(F.when(rae <= 0.5, 1 - 2 * rae).otherwise(F.lit(0.0)))
-    cnt = F.sum(F.when(rae <= 0.5, F.lit(1.0)).otherwise(F.lit(0.0)))
-    bad = F.sum(F.when(rae > 0.5, 2 * rae).otherwise(F.lit(0.0)))
-    score = good / (cnt + bad)
-    return j.groupBy(*group).agg(F.round(score, 6).alias("reg_score"))
-
-
-def outlier_score(
-    df: DataFrame, iat_col: str = "iat", group: list[str] | None = None
-) -> DataFrame:
-    """A7 (mode-centered MAD, one-sided mod-z > 3.5). Returns out_score."""
-    group = group or []
-    clean = df.filter(F.col(iat_col).isNotNull())
-    m = mode_smallest(clean, iat_col, group)
-    j = _join_stat(clean, m, group)
-    dev = j.withColumn("_absdev", F.abs(F.col(iat_col) - F.col("mode")))
-    mad = dev.groupBy(*group).agg(
-        F.median("_absdev").alias("mad"), F.first("mode").alias("mode")
-    )
-    j2 = _join_stat(clean, mad, group)
-    # try_divide: NULL (never an ANSI error) when mad == 0; NULL > 3.5 is
-    # false, matching the reference's "no outliers when MAD degenerate"
-    modz = F.try_divide(0.6745 * (F.col(iat_col) - F.col("mode")), F.col("mad"))
-    is_out = F.when(
-        (F.col("mad") > 0) & (modz > 3.5), F.lit(1.0)
-    ).otherwise(F.lit(0.0))
-    return j2.groupBy(*group).agg(
-        F.round(1 - F.sum(is_out) / F.count(F.lit(1)), 6).alias("out_score")
-    )
-
-
-def cadence_stats_pandas(
-    df: DataFrame, entity: str, iat_col: str = "iat"
-) -> DataFrame:
-    """W2 (grouped-map applyInPandas): per-entity mode / MAD / regularity
-    in one pandas pass — the template for per-group Python
-    (``/root/reference/scripts/metricModules.py:41-44``, SURVEY.md §2.5).
-
-    Semantically identical to the columnar ``regularity_score`` +
-    ``outlier_score`` pair (pinned by tests); use the columnar path at
-    scale (two small shuffles, no Python), this one where per-group
-    logic outgrows SQL. Groups with modal IAT 0 are emitted with null
-    scores (the columnar path drops them)."""
-    import pandas as pd
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        x = pdf[iat_col].dropna()
-        ent = pdf[entity].iloc[0]
-        if len(x) == 0:
-            return pd.DataFrame(
-                [[ent, 0, None, None, None, None]],
-                columns=[entity, "n", "mode", "mad", "reg_score", "out_score"],
-            )
-        counts = x.value_counts()
-        top = counts.max()
-        mode = min(counts[counts == top].index)  # ties -> smallest (Q3)
-        absdev = (x - mode).abs()
-        mad = absdev.median()
-        if mode != 0:
-            rae = absdev / mode
-            good = (1 - 2 * rae[rae <= 0.5]).sum()
-            cnt = (rae <= 0.5).sum()
-            bad = (2 * rae[rae > 0.5]).sum()
-            reg = round(good / (cnt + bad), 6) if (cnt + bad) > 0 else None
-        else:
-            reg = None
-        if mad > 0:
-            modz = 0.6745 * (x - mode) / mad
-            out = round(1 - float((modz > 3.5).sum()) / len(x), 6)
-        else:
-            out = 1.0
-        return pd.DataFrame(
-            [[ent, len(x), float(mode), float(mad), reg, out]],
-            columns=[entity, "n", "mode", "mad", "reg_score", "out_score"],
-        )
-
-    schema = (
-        f"{entity} long, n long, mode double, mad double, "
-        "reg_score double, out_score double"
-    )
-    return df.groupBy(entity).applyInPandas(fn, schema)
 
 
 def outage_by_entity(

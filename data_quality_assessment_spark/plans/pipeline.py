@@ -258,100 +258,18 @@ def host_cadence(pages: DataFrame) -> DataFrame:
     reference's IAT regularity/outlier math per url-host group).
 
     Returns one row per host: n_pages, reg_score, out_score. Hosts whose
-    modal IAT is 0 (same-second bursts) are excluded by regularity (no
-    defined relative error) but still scored for outliers; hosts with no
+    modal IAT is 0 (same-second bursts) get NULL regularity (no defined
+    relative error) but are still scored for outliers; hosts with no
     scoreable IAT at all (single page) get NULL for both.
 
-    FUSED single-pass plan: the IAT lag window hash-partitions by host
-    once, and every later per-host statistic is a WINDOW aggregate whose
-    partition keys start with host — HashPartitioning(host) satisfies
-    each ClusteredDistribution, so Catalyst inserts only sorts, never a
-    second exchange (the mode count windows on (host, iat), still
-    host-determined). Mode (min(-count, value) — ties -> smallest, Q3),
-    mode-centered MAD, the regularity sums and the outlier count all
-    read the one shuffled dataset; the final groupBy(host) also reuses
-    the partitioning. ONE exchange total, pinned by
-    tests/test_plan_shape.py — vs four shuffles of the same rows when
-    regularity_score / outlier_score each recompute their own mode.
-
-    The ONE-exchange window plan has a skew ceiling: window aggregates
-    have no map-side collapse, so a mega-host (one host holding half
-    the crawl) lands on a single task. :func:`host_cadence_salted` is
-    the aggregation-shaped twin for such corpora.
+    The IAT lag partitions by host, and ``cadence.iat_freq_scores``
+    scores the (host, iat) rows; the scores are left-joined onto the
+    per-host page counts.
     """
-    from ..functions import textstats as ts
-
-    d = pages.select(
-        ts.host_of(F.col("url")).alias("host"), F.col("warc_ts")
-    ).filter(F.col("warc_ts").isNotNull())
-    return _host_cadence_fused(d)
-
-
-def _host_cadence_fused(d: DataFrame) -> DataFrame:
-    """The one-exchange window plan over pre-projected (host, warc_ts)."""
-    from pyspark.sql import Window
-
     from ..operators import cadence
 
-    iat = cadence.with_iat(d, "host", "warc_ts")
-
-    w_hi = Window.partitionBy("host", "iat")
-    w_h = Window.partitionBy("host")
-    # per-(host, iat) frequency; a second projection holds the mode pick
-    # (window exprs cannot nest in one select)
-    x = iat.withColumn(
-        "_cnt",
-        F.when(F.col("iat").isNotNull(), F.count(F.lit(1)).over(w_hi)),
-    )
-    x = x.withColumn(
-        "_mode",
-        F.min(
-            F.when(
-                F.col("iat").isNotNull(),
-                F.struct((-F.col("_cnt")).alias("nc"), F.col("iat").alias("v")),
-            )
-        ).over(w_h)["v"],
-    )
-    x = x.withColumn(
-        "_mad",
-        F.percentile(F.abs(F.col("iat") - F.col("_mode")), F.lit(0.5)).over(w_h),
-    )
-    # try_divide: SQL AND does not short-circuit, so the mode != 0 guard
-    # in the aggregation conditions cannot protect a plain division —
-    # hosts whose modal IAT is 0 (same-second bursts) must yield NULL
-    # rae (NULL <= 0.5 is false), not an ANSI DIVIDE_BY_ZERO
-    rae = F.try_divide(F.abs(F.col("iat") - F.col("_mode")), F.col("_mode"))
-    clean = F.col("iat").isNotNull()
-    modz = F.try_divide(
-        0.6745 * (F.col("iat") - F.col("_mode")), F.col("_mad")
-    )
-    is_out = F.when(
-        clean & (F.col("_mad") > 0) & (modz > 3.5), F.lit(1.0)
-    ).otherwise(F.lit(0.0))
-    agg = x.groupBy("host").agg(
-        F.count(F.lit(1)).alias("n_pages"),
-        F.first("_mode").alias("_m"),
-        F.sum(F.when(clean & (F.col("_mode") != 0) & (rae <= 0.5),
-                     1 - 2 * rae).otherwise(F.lit(0.0))).alias("_good"),
-        F.sum(F.when(clean & (F.col("_mode") != 0) & (rae <= 0.5),
-                     F.lit(1.0)).otherwise(F.lit(0.0))).alias("_cntr"),
-        F.sum(F.when(clean & (F.col("_mode") != 0) & (rae > 0.5),
-                     2 * rae).otherwise(F.lit(0.0))).alias("_bad"),
-        F.sum(is_out).alias("_nout"),
-        F.sum(clean.cast("long")).alias("_nclean"),
-    )
-    return agg.select(
-        "host",
-        "n_pages",
-        F.when(
-            F.col("_m").isNotNull() & (F.col("_m") != 0),
-            F.round(F.col("_good") / (F.col("_cntr") + F.col("_bad")), 6),
-        ).alias("reg_score"),
-        F.when(
-            F.col("_nclean") > 0,
-            F.round(1 - F.col("_nout") / F.col("_nclean"), 6),
-        ).alias("out_score"),
-    )
+    d = _host_ts(pages)
+    return _host_scores(d, cadence.with_iat(d, "host", "warc_ts"))
 
 
 def host_cadence_salted(
@@ -359,33 +277,50 @@ def host_cadence_salted(
 ) -> DataFrame:
     """Skew-safe twin of :func:`host_cadence` (identical rows, pinned by
     tests): survives one mega-host owning half the corpus."""
+    return _host_cadence_agg(_host_ts(pages), ts_bucket_sec)
+
+
+def _host_ts(pages: DataFrame) -> DataFrame:
     from ..functions import textstats as ts
 
-    d = pages.select(
+    return pages.select(
         ts.host_of(F.col("url")).alias("host"), F.col("warc_ts")
     ).filter(F.col("warc_ts").isNotNull())
-    return _host_cadence_agg(d, ts_bucket_sec)
+
+
+def _host_scores(d: DataFrame, iat: DataFrame) -> DataFrame:
+    """Per-host page counts of ``d`` left-joined with the cadence scores
+    of the ``(host, iat)`` rows, rounded to 6dp."""
+    from ..operators import cadence
+
+    scores = cadence.iat_freq_scores(iat, ["host"])
+    npages = d.groupBy("host").agg(F.count(F.lit(1)).alias("n_pages"))
+    return npages.join(scores, "host", "left").select(
+        "host",
+        "n_pages",
+        F.round("regularity", 6).alias("reg_score"),
+        F.round("outliers", 6).alias("out_score"),
+    )
 
 
 def _host_cadence_agg(d: DataFrame, ts_bucket_sec: int = 86400) -> DataFrame:
     """host_cadence over pre-projected (host, warc_ts) with NO
-    host-wide single-task stage (the two-stage-salted-aggregate shape
-    the skew module documents, specialized to cadence):
+    host-wide single-task stage over the raw rows (a two-stage salted
+    aggregate, specialized to cadence: the time bucket is the salt):
 
       * the IAT lag windows on (host, time-bucket) — a mega-host's rows
         spread over its crawl-duration/bucket buckets; bucket-boundary
         rows diff against the previous bucket's max via a per-bucket
         bounds table (rows per host = #buckets, tiny);
-      * mode, MAD, regularity and outliers: ``groupBy(host, iat)``
-        counts (map-side partial) feed ``cadence.iat_freq_scores`` —
-        every later stage reads only the frequency-collapsed rows.
+      * mode, MAD, regularity and outliers: ``cadence.iat_freq_scores``
+        collapses the IATs to ``groupBy(host, iat)`` counts (map-side
+        partial) — every later stage reads only the frequency-collapsed
+        rows.
 
     Every big-table stage either partial-aggregates map-side or
     partitions on (host, bucket); only per-host-small tables see
     host-wide windows."""
     from pyspark.sql import Window
-
-    from ..operators import cadence
 
     width = F.lit(int(ts_bucket_sec) * 1_000_000)
     micros = F.unix_micros(F.col("warc_ts").cast("timestamp"))
@@ -404,19 +339,8 @@ def _host_cadence_agg(d: DataFrame, ts_bucket_sec: int = 86400) -> DataFrame:
     x = x.join(bounds, ["host", "_bkt"])
     prev = F.coalesce(F.col("_prev"), F.col("_prev_last"))
     iat_raw = (F.col("_us") - prev) / F.lit(1_000_000.0)
-    freq = (
-        x.select("host", F.when(iat_raw >= 0, iat_raw).alias("iat"))
-        .filter(F.col("iat").isNotNull())
-        .groupBy("host", "iat")
-        .agg(F.count(F.lit(1)).alias("_c"))
-    )
-    scores = cadence.iat_freq_scores(freq, ["host"])
-    npages = d.groupBy("host").agg(F.count(F.lit(1)).alias("n_pages"))
-    return npages.join(scores, "host", "left").select(
-        "host",
-        "n_pages",
-        F.round("regularity", 6).alias("reg_score"),
-        F.round("outliers", 6).alias("out_score"),
+    return _host_scores(
+        d, x.select("host", F.when(iat_raw >= 0, iat_raw).alias("iat"))
     )
 
 

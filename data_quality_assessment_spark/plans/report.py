@@ -53,8 +53,8 @@ def six_metric_report(
     single-partition WindowExec and holds at any cardinality.
 
     Plan shape (results pinned by tests/test_report_equiv.py against
-    the row-level composition over ``cadence.regularity_score`` /
-    ``outlier_score``):
+    the row-level composition over ``tests/oracle.py``'s
+    ``regularity_score`` / ``outlier_score``):
 
       * dupe + format/unknown/completeness fuse into ONE pass over the
         raw frame — all four are integer counts, so re-grouping the
@@ -62,12 +62,13 @@ def six_metric_report(
       * dedup is pass A's (entity, ts) grouping itself: the IAT reads
         no other column, so the lag runs over those distinct groups
         (no row_number window, no per-row tiebreak);
-      * the IAT subtree (scan + aggregate + the lag window) feeds ONE
-        ``groupBy(iat).count()`` frequency table, and
-        ``cadence.iat_freq_scores`` derives mode, MAD, regularity and
-        outliers from it. Every later reference reads that table's
-        shuffle (a reused exchange), so the subtree runs once with no
-        materialization — pinned by tests/test_plan_shape.py.
+      * the IAT subtree (scan + aggregate + the lag window) feeds
+        ``cadence.iat_freq_scores``, which collapses it to ONE
+        ``groupBy(iat).count()`` frequency table and derives mode, MAD,
+        regularity and outliers from it. Every later reference reads
+        that table's shuffle (a reused exchange), so the subtree runs
+        once with no materialization — pinned by
+        tests/test_plan_shape.py.
     """
     required = required or [entity, ts, "payload_str", "payload_num"]
     known = known or required
@@ -117,20 +118,10 @@ def six_metric_report(
     iat = cadence.with_iat(
         per_key.select(entity, "_ts"), entity, "_ts", global_order=global_order
     )
-    clean = iat.filter(F.col("iat").isNotNull()).select("iat")
 
-    # --- PASS B: every IAT score from ONE frequency table (mode, MAD,
-    # regularity and outliers each depend only on the distinct iat value
-    # and its count); rounded 6dp then 3dp like the reference (Q8).
-    # repartition("iat") is free in scale mode (the aggregate's own
-    # exchange already satisfies it); in parity mode the aggregate runs
-    # above the global lag's single partition, and this exchange is what
-    # the kernel's three references reuse instead of re-running the lag.
-    freq = (
-        clean.groupBy("iat").agg(F.count(F.lit(1)).alias("_c"))
-        .repartition("iat")
-    )
-    scores = cadence.iat_freq_scores(freq, []).select(
+    # --- PASS B: every IAT score from ONE frequency table; rounded 6dp
+    # then 3dp like the reference (Q8).
+    scores = cadence.iat_freq_scores(iat, []).select(
         F.round(F.round("regularity", 6), 3).alias("regularity"),
         F.round(F.round("outliers", 6), 3).alias("outliers"),
     )

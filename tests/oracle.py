@@ -16,6 +16,9 @@ this implementation path was validated against both golden reports
 
 (c) the similarity kernel's arithmetic in plain Python floats
 (``operators/similarity.py`` is pinned to it bit for bit).
+
+(d) the row-level Spark forms of the IAT regularity (A8) and outlier (A7)
+scores that ``cadence.iat_freq_scores`` is pinned to.
 """
 
 from __future__ import annotations
@@ -27,10 +30,13 @@ from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from data_quality_assessment_spark.config import PipelineConfig, DEFAULT_CONFIG
 from data_quality_assessment_spark.functions import textcore
 from data_quality_assessment_spark.functions.lm import get_model
+from data_quality_assessment_spark.operators.cadence import _join_stat, mode_smallest
 
 # ---------------------------------------------------------------------------
 # (a) flagship pipeline oracle
@@ -319,3 +325,52 @@ def oracle_cosine(a, b) -> float:
 def oracle_plane_dots(vec, weights) -> list[float]:
     """dot(vec, w) for every weight row w, each a left-to-right fold."""
     return [_fold(x * w for x, w in zip(vec, row)) for row in weights]
+
+
+# ---------------------------------------------------------------------------
+# (d) row-level IAT scores (Spark) — the reference the frequency-table
+#     kernel ``cadence.iat_freq_scores`` is compared against
+# ---------------------------------------------------------------------------
+
+
+def regularity_score(
+    df: DataFrame, iat_col: str = "iat", group: list[str] | None = None
+) -> DataFrame:
+    """A8 as pure columnar aggregation. Returns [group cols,] reg_score."""
+    group = group or []
+    clean = df.filter(F.col(iat_col).isNotNull())
+    # groups whose modal IAT is 0 (duplicate timestamps dominate) have no
+    # defined relative error — excluded from the output (ANSI-safe: Spark 4
+    # raises on division by zero rather than returning NULL)
+    m = mode_smallest(clean, iat_col, group).filter(F.col("mode") != 0)
+    j = _join_stat(clean, m, group)
+    rae = F.abs(F.col(iat_col) - F.col("mode")) / F.col("mode")
+    good = F.sum(F.when(rae <= 0.5, 1 - 2 * rae).otherwise(F.lit(0.0)))
+    cnt = F.sum(F.when(rae <= 0.5, F.lit(1.0)).otherwise(F.lit(0.0)))
+    bad = F.sum(F.when(rae > 0.5, 2 * rae).otherwise(F.lit(0.0)))
+    score = good / (cnt + bad)
+    return j.groupBy(*group).agg(F.round(score, 6).alias("reg_score"))
+
+
+def outlier_score(
+    df: DataFrame, iat_col: str = "iat", group: list[str] | None = None
+) -> DataFrame:
+    """A7 (mode-centered MAD, one-sided mod-z > 3.5). Returns out_score."""
+    group = group or []
+    clean = df.filter(F.col(iat_col).isNotNull())
+    m = mode_smallest(clean, iat_col, group)
+    j = _join_stat(clean, m, group)
+    dev = j.withColumn("_absdev", F.abs(F.col(iat_col) - F.col("mode")))
+    mad = dev.groupBy(*group).agg(
+        F.median("_absdev").alias("mad"), F.first("mode").alias("mode")
+    )
+    j2 = _join_stat(clean, mad, group)
+    # try_divide: NULL (never an ANSI error) when mad == 0; NULL > 3.5 is
+    # false, matching the reference's "no outliers when MAD degenerate"
+    modz = F.try_divide(0.6745 * (F.col(iat_col) - F.col("mode")), F.col("mad"))
+    is_out = F.when(
+        (F.col("mad") > 0) & (modz > 3.5), F.lit(1.0)
+    ).otherwise(F.lit(0.0))
+    return j2.groupBy(*group).agg(
+        F.round(1 - F.sum(is_out) / F.count(F.lit(1)), 6).alias("out_score")
+    )

@@ -91,7 +91,7 @@ def test_host_stats_join_is_size_gated(spark, pages_path):
         "host", F.substring_index(F.substring_index("url", "://", -1), "/", 1)
     )
     iat = cadence.with_iat(df, "host", "warc_ts")
-    score = cadence.regularity_score(iat, "iat", ["host"])
+    score = cadence.iat_freq_scores(iat, ["host"])
     # with the size threshold disabled, only a FORCED broadcast hint could
     # still produce a broadcast join — its absence proves the join is
     # size-driven (estimates statically, actual sizes via AQE at runtime),
@@ -177,20 +177,6 @@ def test_six_metric_report_subtree_runs_once(spark, pages_path, global_order):
     assert "ExistingRDD" not in final, final
 
 
-def test_join_stat_forced_broadcast_hint(spark, pages_path):
-    """broadcast=True keeps the static hint for caller-known-small dims."""
-    from data_quality_assessment_spark.operators import cadence
-    from pyspark.sql import functions as F
-
-    df = spark.read.parquet(pages_path).withColumn(
-        "host", F.substring_index(F.substring_index("url", "://", -1), "/", 1)
-    )
-    stat = df.groupBy("host").count()
-    j = cadence._join_stat(df, stat, ["host"], broadcast=True)
-    plan = _plan(j)
-    assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan, plan
-
-
 def test_sort_output_flags_drop_global_sort(spark):
     """entity_dup_counts / outage_by_entity embed the reference's
     presentation sort (O2). With sort_output=False the physical plan
@@ -220,14 +206,45 @@ def test_sort_output_flags_drop_global_sort(spark):
     assert "rangepartitioning" not in unsorted_plan, unsorted_plan
 
 
-def test_host_cadence_single_exchange(spark, pages_path):
-    """host_cadence is FUSED: the IAT lag window's hash-partition on
-    host is reused by every later window/groupBy (mode, MAD, score
-    aggregations) — exactly ONE Exchange in the executed plan (was ~4
-    shuffles of the same rows when each score recomputed its own mode)."""
-    df = spark.read.parquet(pages_path)
-    plan = _plan(P.host_cadence(df))
-    assert plan.count("Exchange") == 1, plan
+@pytest.fixture(scope="module")
+def events_dir(tmp_path_factory):
+    """An events table (user_id, ts) laid out as __spark_entry__ reads it."""
+    import numpy as np
+    import pandas as pd
+
+    rng = np.random.RandomState(4)
+    n = 400
+    pdf = pd.DataFrame({
+        "user_id": rng.randint(0, 12, n).astype("int64"),
+        "ts": pd.Timestamp("2024-01-01")
+        + pd.to_timedelta(rng.randint(0, 86_400, n), unit="s"),
+    }).astype({"ts": "datetime64[us]"})
+    d = tmp_path_factory.mktemp("events")
+    pdf.to_parquet(d / "events.parquet", index=False)
+    return str(d)
+
+
+@pytest.mark.parametrize(
+    "query",
+    ["host_cadence", "q_iat_regularity", "q_iat_outliers",
+     "q_cadence_pandas"],
+)
+def test_iat_scores_lag_runs_once(spark, pages_path, events_dir, query):
+    """Every per-entity IAT score reads ONE frequency table whose
+    exchange the kernel's three references reuse: the final AQE plan
+    holds the raw-row lag Window exactly once (as the report does)."""
+    import re
+
+    import __spark_entry__ as entry
+
+    if query == "host_cadence":
+        df = P.host_cadence(spark.read.parquet(pages_path))
+    else:
+        df = getattr(entry, query)(spark, events_dir)
+    df.collect()
+    final = _plan(df).split("== Initial Plan ==")[0]
+    assert "isFinalPlan=true" in final, final
+    assert len(re.findall(r"\bWindow \[lag\(", final)) == 1, final
 
 
 def test_dup_ngram_coverage_two_exchanges(spark, pages_path):

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from data_quality_assessment_spark.operators import cadence
 from data_quality_assessment_spark.plans.report import six_metric_report
+from tests.oracle import outlier_score, regularity_score
 
 
 def _reference_six_metric_report(
@@ -41,10 +42,10 @@ def _reference_six_metric_report(
     iat = cadence.with_iat(dd, entity, "_ts", global_order=global_order)
     clean = iat.filter(F.col("iat").isNotNull()).select("iat")
 
-    reg_df = cadence.regularity_score(clean, "iat").select(
+    reg_df = regularity_score(clean, "iat").select(
         F.round("reg_score", 3).alias("regularity")
     )
-    out_df = cadence.outlier_score(clean, "iat").select(
+    out_df = outlier_score(clean, "iat").select(
         F.round("out_score", 3).alias("outliers")
     )
 

@@ -1,26 +1,10 @@
-"""Skew utilities + grouped-map vs columnar cadence consistency."""
+"""Cadence over pages (plain and salted host lag) and the IAT-score
+kernel against its row-level reference."""
 
 from __future__ import annotations
 
-import pytest
-
-from data_quality_assessment_spark.operators import cadence, skew
-
-
-def test_salted_distinct_count_exact(spark):
-    rows = [(k, v % (10 if k == "hot" else 3))
-            for k in ["hot"] * 500 + ["a"] * 20 + ["b"] * 7
-            for v in [hash(k) % 97]]
-    # construct: hot key with many rows, few distincts; plus small keys
-    rows = [("hot", i % 13) for i in range(500)]
-    rows += [("a", i % 4) for i in range(20)]
-    rows += [("b", 1) for _ in range(7)]
-    df = spark.createDataFrame(rows, "k string, v int")
-    got = {
-        r.k: r.n_distinct
-        for r in skew.salted_distinct_count(df, "k", "v", buckets=8).collect()
-    }
-    assert got == {"hot": 13, "a": 4, "b": 1}
+from data_quality_assessment_spark.operators import cadence
+from tests.oracle import outlier_score, regularity_score
 
 
 def test_host_cadence_over_pages(spark):
@@ -41,9 +25,12 @@ def test_host_cadence_over_pages(spark):
 
 
 def test_cadence_pandas_matches_columnar(spark):
-    """W2 grouped-map path and the pure-columnar path agree on
-    regularity and outlier scores (where both are defined)."""
+    """The frequency-table kernel (every IAT score the package ships,
+    ``q_cadence_pandas`` included) and the row-level regularity and
+    outlier reference agree exactly after the 6dp rounding; groups
+    whose mode is 0 are exactly the kernel's NULL-regularity rows."""
     import numpy as np
+    from pyspark.sql import functions as F
 
     rng = np.random.RandomState(9)
     rows = []
@@ -53,23 +40,28 @@ def test_cadence_pandas_matches_columnar(spark):
             t += float(rng.choice([30.0, 30.0, 30.0, 31.0, 600.0],
                                   p=[0.5, 0.2, 0.2, 0.05, 0.05]))
             rows.append((e, t))
+    # a modal IAT of 0: no regularity row, and a MAD of 0
+    rows += [(12, x) for x in (0.0, 0.0, 0.0, 5.0, 40.0)]
     df = spark.createDataFrame(rows, "user_id long, iat double")
     # treat 'iat' directly (already a lag-diff in this fixture)
-    pd_scores = {
-        r.user_id: (r.reg_score, r.out_score)
-        for r in cadence.cadence_stats_pandas(df, "user_id").collect()
-    }
-    col_reg = {
+    got = cadence.iat_freq_scores(df, ["user_id"]).select(
+        "user_id", "n",
+        F.round("regularity", 6).alias("reg_score"),
+        F.round("outliers", 6).alias("out_score"),
+    ).collect()
+    assert {r.user_id: r.n for r in got} == {**{e: 60 for e in range(12)}, 12: 5}
+    want_reg = {
         r.user_id: r.reg_score
-        for r in cadence.regularity_score(df, "iat", ["user_id"]).collect()
+        for r in regularity_score(df, "iat", ["user_id"]).collect()
     }
-    col_out = {
+    want_out = {
         r.user_id: r.out_score
-        for r in cadence.outlier_score(df, "iat", ["user_id"]).collect()
+        for r in outlier_score(df, "iat", ["user_id"]).collect()
     }
-    for e in range(12):
-        assert pd_scores[e][0] == pytest.approx(col_reg[e], abs=1e-6), e
-        assert pd_scores[e][1] == pytest.approx(col_out[e], abs=1e-6), e
+    assert 12 not in want_reg
+    assert {r.user_id: r.reg_score for r in got
+            if r.reg_score is not None} == want_reg
+    assert {r.user_id: r.out_score for r in got} == want_out
 
 
 def test_minmax_scale_and_regularity_old(spark):
@@ -139,10 +131,14 @@ def _rows_of(df):
 
 
 def test_host_cadence_salted_equals_fused(spark):
-    """The aggregation-shaped skew-safe twin must reproduce the fused
-    window plan's rows exactly — including the mega-host whose rows
-    span many time buckets, mode ties, MAD interpolation (even and odd
-    clean counts), zero-mode hosts and the single-page host."""
+    """The bucketed-lag skew-safe twin must reproduce the plain
+    host-partitioned lag's rows exactly, and both the row-level
+    reference's — including the mega-host whose rows span many time
+    buckets, MAD interpolation (even and odd clean counts) and the
+    single-page host."""
+    from pyspark.sql import functions as F
+
+    from data_quality_assessment_spark.functions.textstats import host_of
     from data_quality_assessment_spark.plans.pipeline import (
         host_cadence,
         host_cadence_salted,
@@ -150,6 +146,14 @@ def test_host_cadence_salted_equals_fused(spark):
 
     pages = _skewed_pages(spark)
     fused = _rows_of(host_cadence(pages))
+    d = pages.select(host_of(F.col("url")).alias("host"), "warc_ts")
+    iat = cadence.with_iat(d, "host", "warc_ts")
+    ref = (
+        d.groupBy("host").agg(F.count(F.lit(1)).alias("n_pages"))
+        .join(regularity_score(iat, "iat", ["host"]), "host", "left")
+        .join(outlier_score(iat, "iat", ["host"]), "host", "left")
+    )
+    assert fused == _rows_of(ref)
     # bucket width far smaller than the mega-host's span -> the lag
     # really crosses bucket boundaries
     salted = _rows_of(host_cadence_salted(pages, ts_bucket_sec=3600))
@@ -160,10 +164,11 @@ def test_host_cadence_salted_equals_fused(spark):
 
 
 def test_host_cadence_salted_no_hostwide_window_on_big_table(spark):
-    """Plan shape: the salted variant's windows partition on
-    (host, bucket) or run over frequency-collapsed rows; the raw-row
-    table must never see a host-only window, and the big-table
+    """Plan shape: the salted variant's lag over raw rows partitions on
+    (host, bucket), so no raw-row window is host-wide, and the big-table
     aggregations keep their map-side partial stage."""
+    import re
+
     from data_quality_assessment_spark.plans.pipeline import (
         host_cadence_salted,
     )
@@ -173,8 +178,10 @@ def test_host_cadence_salted_no_hostwide_window_on_big_table(spark):
         host_cadence_salted(pages, ts_bucket_sec=3600)
         ._jdf.queryExecution().executedPlan().toString()
     )
-    # the lag window over raw rows carries both partition keys
-    assert "partitionspec(host" in plan.lower().replace("#", "").replace(
-        " ", ""
-    ) or "Window" in plan  # structural floor: windows exist
+    # Window [exprs], [partition keys], [order keys]
+    specs = re.findall(r"Window \[lag\(_us#.*?\], \[([^\]]*)\], \[", plan)
+    assert specs, plan
+    for keys in specs:
+        names = {k.strip().split("#")[0] for k in keys.split(",")}
+        assert {"host", "_bkt"} <= names, (keys, plan)
     assert "HashAggregate" in plan
