@@ -1,7 +1,14 @@
 """Native-Column text statistics — the JVM/codegen twins of ``textcore``.
 
-Each function returns a ``pyspark.sql.Column`` computing exactly the same
-value as its pure-Python twin (pinned by ``tests/test_textstats_parity.py``).
+Each function returns a ``pyspark.sql.Column`` computing the same value
+as its pure-Python twin (pinned by ``tests/test_textstats_parity.py``),
+with one known exception: ``dup_line_frac`` strips each line of the
+ASCII whitespace class only, while ``textcore.dup_line_frac`` (and the
+enrich kernel) use ``str.strip``, which also strips NBSP, the Unicode
+spaces and U+001C..U+001F. A line holding only such characters is kept
+here and dropped there: ``'a\xa0\na\nb'`` gives 0.0 here and 1/3 in
+``textcore``. The JVM meaning is the one ``ORACLE_DOC_TEXTSTATS`` pins;
+the flagship output uses the Python one.
 
 Implementation note (measured, 60k docs): higher-order array functions
 (``transform``/``filter``/``aggregate``) are CodegenFallback — interpreted,

@@ -8,12 +8,20 @@ public Spark primitives:
 
   1. a deterministic work-unit key ``part_id = pmod(xxhash64(url), P)``
      (url-hash partitioning per BASELINE.json north_star);
-  2. a **left-anti join** against the checkpoint table to skip
-     completed work (SURVEY.md §2.11 join #3);
+  2. a literal ``NOT part_id IN (...)`` filter over the completed ids,
+     collected once from the checkpoint table (at most P rows), to skip
+     completed work — the persisted output never reads the checkpoint
+     table it appends to at the end;
   3. **dynamic partition overwrite** for idempotent re-writes — a
      partially-written partition from a crashed run is replaced, never
      duplicated, so "checkpoint row written last" makes the whole unit
      transactional at the directory level.
+
+The pipeline output is routed by ``repartition("part_id")`` before it
+is persisted: every part_id lives in one cached partition, so each
+table gets one file per part_id and the side tables (lineage, metrics
+and the checkpoint's distinct ids) aggregate over the cache with no
+Exchange of their own.
 
 Tables written per run (all keyed by part_id, all written with
 partition-overwrite so a crashed unit is REPLACED on resume — the
@@ -22,11 +30,18 @@ checkpoint row, written last, is the only append):
   * ``pages_out``   — the verdict+scrub output, partitioned by part_id
   * ``lineage``     — one row per (part_id, rule_id): fire counts
   * ``metrics``     — one row per part_id: n_docs, n_kept, keep_rate
-  * ``checkpoint``  — one row per completed part_id (written LAST)
+  * ``checkpoint``  — one row per completed part_id, one file (written
+    LAST, only after both side-table writes succeed)
+
+Lineage and metrics are written at the same time, from two driver
+threads that keep the caller's job group; the checkpoint waits for both.
 """
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
+
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -53,9 +68,10 @@ def with_part_id(df: DataFrame, num_parts: int) -> DataFrame:
 def pending_work(
     df: DataFrame, wh: Warehouse, run_id: str
 ) -> tuple[DataFrame, set[int]]:
-    """Anti-join completed part_ids for this run_id. Returns (pending
-    rows, completed ids). The checkpoint side is tiny (<= num_parts
-    rows) — broadcast the anti-join, no shuffle of the big side."""
+    """Drop completed part_ids for this run_id. Returns (pending rows,
+    completed ids). The checkpoint side is tiny (<= num_parts rows):
+    its ids are collected once and filtered as literals, so the pending
+    plan never reads the checkpoint table again."""
     if not wh.exists(CHECKPOINT):
         return df, set()
     done = (
@@ -67,7 +83,7 @@ def pending_work(
     done_ids = {r.part_id for r in done.collect()}
     if not done_ids:
         return df, set()
-    pending = df.join(F.broadcast(done), "part_id", "left_anti")
+    pending = df.filter(~F.col("part_id").isin(sorted(done_ids)))
     return pending, done_ids
 
 
@@ -104,8 +120,9 @@ def run_resumable(
     """Run the flagship DAG over all not-yet-completed partitions.
 
     One Spark job processes every pending partition (no driver-side
-    per-partition loop); commit order per the module docstring:
-    pages_out -> lineage -> metrics -> checkpoint (last).
+    per-partition loop). The output is routed by part_id and persisted;
+    commit order per the module docstring: pages_out, then lineage and
+    metrics together, then the checkpoint (last, after both succeed).
     """
     num_parts = num_parts or cfg.num_partitions
     keyed = with_part_id(df, num_parts)
@@ -119,8 +136,9 @@ def run_resumable(
         "part_id", *pipeline.OUTPUT_COLUMNS
     )
 
-    # cache: pages_out write + lineage + metrics + checkpoint all read it
-    out = out.persist()
+    # route by part_id, then cache: pages_out + lineage + metrics +
+    # checkpoint all read it, one file per part_id and no further Exchange
+    out = out.repartition("part_id").persist()
     try:
         # every table before the checkpoint row uses partition OVERWRITE
         # keyed by part_id: a crash between any of these writes and the
@@ -128,13 +146,27 @@ def run_resumable(
         # partitions instead of double-appending lineage/metrics rows
         # (which would double-count fire counts and doc totals downstream)
         wh.overwrite_partitions(out, PAGES_OUT, ["part_id"])
-        wh.overwrite_partitions(lineage_rows(out), LINEAGE, ["part_id"])
-        wh.overwrite_partitions(metrics_rows(out), METRICS, ["part_id"])
+        # the two side tables at once, each thread in this job group; the
+        # pool's exit waits for both before either failure is raised
+        with ThreadPoolExecutor(2) as pool:
+            writes = [
+                pool.submit(
+                    inheritable_thread_target(spark)(wh.overwrite_partitions),
+                    rows, table, ["part_id"],
+                )
+                for rows, table in (
+                    (lineage_rows(out), LINEAGE),
+                    (metrics_rows(out), METRICS),
+                )
+            ]
+        for w in writes:
+            w.result()
         ck = (
             out.select("part_id")
             .distinct()
             .withColumn("run_id", F.lit(cfg.run_id))
             .withColumn("status", F.lit("done"))
+            .coalesce(1)
         )
         wh.append(ck, CHECKPOINT)
         return {

@@ -3,6 +3,8 @@ are not recomputed; resumed output equals a cold run."""
 
 from __future__ import annotations
 
+import os
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -121,3 +123,108 @@ def test_crash_before_checkpoint_replaces_not_duplicates(spark, tmp_path, pages)
         got = sorted(tuple(r) for r in wh.read(table).collect())
         want = sorted(tuple(r) for r in cold_wh.read(table).collect())
         assert got == want, table
+
+
+@pytest.fixture(scope="module")
+def cold_wh(spark, tmp_path_factory, pages):
+    """One cold run in the default test session, the reference the
+    tests below compare against."""
+    wh = Warehouse(spark, str(tmp_path_factory.mktemp("cold") / "wh"))
+    resumable.run_resumable(spark, pages, wh, num_parts=N_PARTS)
+    return wh
+
+
+def _tables(wh):
+    """Every row of each table, order-insensitive."""
+    return {
+        t: sorted(repr(tuple(r)) for r in wh.read(t).collect())
+        for t in (resumable.PAGES_OUT, resumable.LINEAGE, resumable.METRICS,
+                  resumable.CHECKPOINT)
+    }
+
+
+def _parquet_files(path):
+    return [f for f in os.listdir(path) if f.endswith(".parquet")]
+
+
+@pytest.mark.parametrize("failing", [resumable.LINEAGE, resumable.METRICS])
+def test_side_table_failure_writes_no_checkpoint(
+    spark, tmp_path, pages, cold_wh, failing
+):
+    """Lineage and metrics are written from two threads: if either write
+    fails, run_resumable raises and no checkpoint row exists, so a clean
+    re-run recomputes every part and matches a cold run."""
+
+    class FailingWarehouse(Warehouse):
+        def overwrite_partitions(self, df, table, cols):
+            if table == failing:
+                raise RuntimeError(f"{table} write failed")
+            super().overwrite_partitions(df, table, cols)
+
+    root = str(tmp_path / "wh")
+    with pytest.raises(RuntimeError, match=f"{failing} write failed"):
+        resumable.run_resumable(
+            spark, pages, FailingWarehouse(spark, root), num_parts=N_PARTS
+        )
+    wh = Warehouse(spark, root)
+    assert not wh.exists(resumable.CHECKPOINT)
+
+    res = resumable.run_resumable(spark, pages, wh, num_parts=N_PARTS)
+    assert res == {"parts_done_prior": 0, "parts_run": N_PARTS}
+    assert _tables(wh) == _tables(cold_wh)
+
+
+def test_commit_layout_and_side_table_plans(spark, tmp_path, pages):
+    """The output is routed by part_id before it is cached: one parquet
+    file per part_id directory in every keyed table, one checkpoint file
+    per run, and no Exchange above the cache in the side-table writes,
+    which run in the caller's job group."""
+    sc = spark.sparkContext
+    plans, groups = {}, {}
+
+    class PlanWarehouse(Warehouse):
+        def overwrite_partitions(self, df, table, cols):
+            plans[table] = df._jdf.queryExecution().executedPlan().toString()
+            groups[table] = sc.getLocalProperty("spark.jobGroup.id")
+            super().overwrite_partitions(df, table, cols)
+
+    wh = PlanWarehouse(spark, str(tmp_path / "wh"))
+    sc.setLocalProperty("spark.jobGroup.id", "resume-commit")
+    try:
+        resumable.run_resumable(spark, pages, wh, num_parts=N_PARTS)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert set(groups.values()) == {"resume-commit"}, groups
+
+    for table in (resumable.PAGES_OUT, resumable.LINEAGE, resumable.METRICS):
+        parts = [d for d in os.listdir(wh.path(table)) if d.startswith("part_id=")]
+        assert len(parts) == N_PARTS, table
+        for d in parts:
+            assert len(_parquet_files(os.path.join(wh.path(table), d))) == 1, (table, d)
+    assert len(_parquet_files(wh.path(resumable.CHECKPOINT))) == 1
+
+    for table in (resumable.LINEAGE, resumable.METRICS):
+        above, cache, _ = plans[table].partition("InMemoryTableScan")
+        assert cache, plans[table]
+        assert "Exchange" not in above, plans[table]
+
+
+@pytest.mark.parametrize("conf", [
+    {"spark.sql.shuffle.partitions": "1"},
+    {"spark.sql.shuffle.partitions": "7"},
+    {"spark.sql.adaptive.enabled": "false"},
+], ids=["shuffle1", "shuffle7", "aqe_off"])
+def test_tables_invariant_to_shuffle_settings(spark, tmp_path, pages, cold_wh, conf):
+    """The routing repartition follows spark.sql.shuffle.partitions and
+    AQE; the rows of every table must not."""
+    old = {k: spark.conf.get(k) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        wh = Warehouse(spark, str(tmp_path / "wh"))
+        resumable.run_resumable(spark, pages, wh, num_parts=N_PARTS)
+        got = _tables(wh)
+    finally:
+        for k, v in old.items():
+            spark.conf.set(k, v)
+    assert got == _tables(cold_wh)

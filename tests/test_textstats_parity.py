@@ -62,6 +62,23 @@ def test_native_equals_python(spark, texts):
         assert bool(r["blank"]) == py_blank, t
 
 
+def test_dup_line_frac_strip_class_differs(spark):
+    """The one known twin difference: the JVM strips lines of the ASCII
+    whitespace class only, textcore uses str.strip (NBSP, Unicode spaces
+    and U+001C..U+001F too), so a line made of those characters counts
+    as a line only in the JVM. Pinned so that either side changing its
+    meaning fails here."""
+    cases = [
+        ("a\xa0\na\nb", 0.0, 1.0 - 2 / 3),
+        ("x\u2003\nx", 0.0, 0.5),
+        ("hello\x1c\nhello", 0.0, 0.5),
+    ]
+    got = _spark_stats(spark, [t for t, _, _ in cases])
+    for (t, jvm, py), dlf in zip(cases, got["dlf"]):
+        assert dlf == jvm, repr(t)
+        assert textcore.dup_line_frac(t) == py, repr(t)
+
+
 def test_host_of(spark):
     df = spark.createDataFrame(
         [("https://a.example.com/x/y",), ("http://b.io",), ("c.net/p",)], ["url"]
