@@ -240,8 +240,9 @@ FROM r
 
 
 # ---------------------------------------------------------------------------
-# language identification — SQL twin of textcore.lang_id for Latin-script
-# corpora plus the three script ranges (SURVEY.md §2.7 target stage)
+# language identification — SQL twin of the enrich kernel's lang decision
+# (per-doc reference: tests/oracle.py:lang_id) for Latin-script corpora
+# plus the three script ranges (SURVEY.md §2.7 target stage)
 # ---------------------------------------------------------------------------
 
 
@@ -2643,7 +2644,7 @@ def _oracle_pipeline_scrub_sql() -> str:
 
     EMAIL (no lookarounds) and SLUR (RE2 supports \\b; the lexicon and
     Python side are ASCII-folded) remain single global replaces. Rule
-    order and staging mirror textcore._SCRUB_ORDER:
+    order and staging mirror ``textcore.scrub_text``:
     email -> ip -> phone -> slur.
     """
     from data_quality_assessment_spark.functions.textcore import (

@@ -3,16 +3,16 @@
 Mirrors the reference's per-dataset JSON config (its config selects input
 file, the dedup/IAT key columns and the outlier alpha —
 ``/root/reference/scripts/PreProcessing.py:26-48``,
-``/root/reference/config/suratITMSConfig.json:7-19``). Ours selects the
-input table, the rule thresholds, the dedup keys, and partitioning knobs.
-All thresholds live here so the Spark plan and the test oracle read the
-same numbers.
+``/root/reference/config/suratITMSConfig.json:7-19``). Ours holds the
+rule thresholds, the dedup keys, the resumable run's part count and its
+run id; the input and output locations are job arguments. All thresholds
+live here so the Spark plan and the test oracle read the same numbers.
 """
 
 from __future__ import annotations
 
 import json
-from dataclasses import dataclass, field, asdict
+from dataclasses import dataclass, field
 from typing import Any
 
 
@@ -29,30 +29,20 @@ class RuleThresholds:
     max_dup_line_frac: float = 0.30
     max_top_bigram_share: float = 0.20
     max_perplexity: float = 450.0
-    min_lang_confidence: float = 0.20
     allowed_langs: tuple[str, ...] = ("en",)
 
 
 @dataclass(frozen=True)
 class PipelineConfig:
-    """Everything the flagship job needs, JSON-serializable."""
+    """Everything the flagship job needs, loadable from JSON."""
 
-    input_path: str = ""
-    output_path: str = ""
     # dedup keys — reference uses (entity_id, observationDateTime)
     # (config/suratITMSConfig.json:9-11); ours is (url, warc_ts).
     dedup_keys: tuple[str, ...] = ("url", "warc_ts")
-    # IQR fence multiplier, reference `alpha` (PreProcessing.py:119-130)
-    alpha: float = 1.5
     thresholds: RuleThresholds = field(default_factory=RuleThresholds)
-    # partitioning
+    # resumability: work units (part_ids) and the checkpoint's run id
     num_partitions: int = 32
-    # hosts with more than this many docs get salted in the shuffle
-    skew_salt_threshold: int = 500_000
-    skew_salt_buckets: int = 16
-    # resumability
     run_id: str = "run0"
-    checkpoint_path: str = ""
 
     @staticmethod
     def from_json(path: str) -> "PipelineConfig":
@@ -65,10 +55,6 @@ class PipelineConfig:
         if "dedup_keys" in raw:
             raw["dedup_keys"] = tuple(raw["dedup_keys"])
         return PipelineConfig(thresholds=th, **raw)
-
-    def to_json(self, path: str) -> None:
-        with open(path, "w") as f:
-            json.dump(asdict(self), f, indent=2, default=list)
 
 
 DEFAULT_CONFIG = PipelineConfig()

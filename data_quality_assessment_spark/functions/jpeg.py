@@ -16,8 +16,9 @@ coefficients encoded both ways must decode to identical pixels
 
 Out of scope (raise ``NotImplementedError`` with a clear message):
 arithmetic-coded streams, 12-bit precision, hierarchical/lossless
-modes. ``image_pixel_stats`` catches these into valid=false rows like
-any undecodable blob (or hands them to PIL when installed).
+modes. ``multimodal.image_pixel_stats_batches`` catches these into
+valid=false rows like any undecodable blob (or hands them to PIL when
+installed).
 
 Scale shape: pure per-row numpy inside the ``mapInPandas`` extractors —
 no Spark-side coupling. The IDCT is a pair of 8x8 matrix multiplies
@@ -26,9 +27,10 @@ decoding is the sequential part and is bounded by the blob size.
 Honest throughput note: the per-bit Python Huffman decode runs at
 roughly 0.5-1 MB/s per core — correct and fully tested, right for
 thumbnails/fixtures/validation, but a pipeline decoding full-size
-crawl photos in bulk should install Pillow (``image_pixel_stats``
-prefers this decoder, then falls back to PIL for formats it doesn't
-parse; swap the order in the extractor for bulk photo decode).
+crawl photos in bulk should install Pillow
+(``image_pixel_stats_batches`` prefers this decoder, then falls back to
+PIL for formats it doesn't parse; swap the order in the extractor for
+bulk photo decode).
 """
 
 from __future__ import annotations

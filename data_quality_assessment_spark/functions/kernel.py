@@ -490,8 +490,9 @@ def _enrich_from_arr(arr, model, ft) -> dict[str, list]:
     exp = math.exp
     for i in range(n):
         nw_i = nw_l[i]
-        # language decision (identical outputs to lang_id: its
-        # empty-text early return equals the letters==0 branch)
+        # language decision (identical outputs to the per-doc reference
+        # tests/oracle.py:lang_id: its empty-text early return equals
+        # the letters==0 branch)
         latin = latin_l[i]
         ccyr = cyr_l[i]
         ccjk = cjk_l[i]

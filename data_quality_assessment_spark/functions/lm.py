@@ -2,9 +2,10 @@
 
 KenLM is unavailable offline (SURVEY.md §7.5), so the perplexity stage uses
 a deterministic bigram count model built at import from a fixed seed. The
-fixture generator samples "clean" text from THIS model's Markov chain, so
-in-domain text scores low perplexity and gibberish scores high — the same
-separation a real KenLM gives on web text. The loader seam
+corpus generator (``fixture_gen.gen_pages_fast``, via
+``sample_lines_batch``) samples "clean" text from THIS model's Markov
+chain, so in-domain text scores low perplexity and gibberish scores
+high — the same separation a real KenLM gives on web text. The loader seam
 (``get_model()``) is where real ARPA weights would plug in; the Spark side
 holds the model in a per-Python-worker singleton (broadcast-once property,
 BASELINE.json north_star).
@@ -39,31 +40,16 @@ def _build_transition_weights() -> np.ndarray:
 
 
 _TRANS = _build_transition_weights()
-_START = np.full(_V, 1.0 / _V)
-
-
-def sample_words(rng: np.random.RandomState, n: int) -> list[str]:
-    """Sample an n-word sequence from the frozen Markov chain.
-
-    Used by both LM training (below) and the fixture generator, so fixture
-    'clean' text is in-domain by construction.
-    """
-    out = []
-    cur = int(rng.choice(_V, p=_START))
-    out.append(VOCAB[cur])
-    for _ in range(n - 1):
-        cur = int(rng.choice(_V, p=_TRANS[cur]))
-        out.append(VOCAB[cur])
-    return out
 
 
 def sample_lines_batch(
     rng: np.random.RandomState, lengths: np.ndarray, chunk: int = 50_000
 ) -> list[str]:
-    """Vectorized twin of ``sample_words``: one Markov line per entry of
-    ``lengths``, all chains advanced in lockstep (chunked). Used by the
-    bench corpus generator — the per-word ``rng.choice`` path costs
-    ~3ms/line, this ~3µs/line."""
+    """One line sampled from the frozen Markov chain per entry of
+    ``lengths``, all chains advanced in lockstep (chunked): the corpus
+    generator's clean text (``fixture_gen.gen_pages_fast``), in-domain
+    by construction. A per-word ``rng.choice`` walk costs ~3ms/line,
+    this ~3µs/line."""
     cum_t = np.cumsum(_TRANS, axis=1)
     out: list[str] = []
     for lo in range(0, len(lengths), chunk):
@@ -169,9 +155,6 @@ class BigramLM:
 
     def perplexity(self, text: str, tokens: list[str] | None = None) -> float:
         return self.perplexity_ids(self.word_ids(text, tokens))
-
-    def perplexity_batch(self, texts: list[str | None]) -> list[float]:
-        return [self.perplexity(t) if t else 1.0 for t in texts]
 
 
 _MODEL: BigramLM | None = None

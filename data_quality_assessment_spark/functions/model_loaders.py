@@ -1,9 +1,10 @@
 """Real-artifact model loaders — the seams where production weights plug
 into the langid / perplexity stages (VERDICT r1 next #8).
 
-The in-repo stand-ins (``lm.BigramLM``, ``textcore.lang_id``) are what
-run offline; these loaders make the swap-in path REAL and unit-tested
-against tiny checked-in fixtures (tests/fixtures/):
+The in-repo stand-ins (``lm.BigramLM`` and the enrich kernel's
+script-vote language decision) are what run offline; these loaders
+make the swap-in path REAL and unit-tested against tiny checked-in
+fixtures (tests/fixtures/):
 
   * ``load_arpa`` — parses the standard ARPA n-gram text format (the
     format KenLM reads/writes: ``\\data\\`` counts header, per-order
@@ -32,7 +33,7 @@ against tiny checked-in fixtures (tests/fixtures/):
 
 The langid seam: ``get_fasttext()`` returns a per-worker singleton when
 ``DQ_SPARK_FASTTEXT`` names a ``.bin`` — the enrich kernel then uses
-the model's prediction instead of the heuristic ``textcore.lang_id``.
+the model's prediction instead of its heuristic script-vote decision.
 Both seams are per-doc hooks inside the one vectorized enrich kernel
 (``kernel._enrich_from_arr``): every stage a model does not replace
 still runs over the whole Arrow batch.
@@ -66,10 +67,6 @@ class FastTextHeader:
     maxn: int
     lr_update_rate: int
     t: float
-
-    @property
-    def is_supervised(self) -> bool:
-        return self.model == 3
 
 
 def read_fasttext_header(path: str) -> FastTextHeader:

@@ -403,25 +403,22 @@ def _decode_image_rgb(raw: bytes) -> np.ndarray:
     raise ValueError("undecodable image blob")
 
 
-def image_pixel_stats(df: DataFrame) -> DataFrame:
-    """REAL per-channel pixel statistics from the dependency-free PNG
-    and GIF decoders (falls back to PIL for other formats when
-    installed):
-    per-channel means computed as exact integer sums with one final
-    division — bit-stable across engines, the property the DuckDB
-    oracle checks. Undecodable blobs yield valid=false rows."""
-    return df.select("media_id", "blob").mapInPandas(
-        image_pixel_stats_batches, IMAGE_PIXEL_SCHEMA
-    )
-
-
 def image_pixel_stats_batches(
     batches: Iterator[pd.DataFrame],
 ) -> Iterator[pd.DataFrame]:
-    """Batch transform behind :func:`image_pixel_stats`, exposed so
-    callers that synthesize media in Python (the entry fixtures) can
-    FUSE generator -> decoder into one MapInPandas node instead of
-    round-tripping every blob JVM->Python->JVM->Python (guide §4)."""
+    """REAL per-channel pixel statistics, one ``IMAGE_PIXEL_SCHEMA`` row
+    per ``(media_id, blob)`` input row, from the dependency-free PNG, GIF
+    and JPEG decoders (falls back to PIL for other formats when
+    installed). Per-channel means are exact integer sums with one final
+    division — bit-stable across engines, the property the DuckDB oracle
+    checks. Undecodable or null blobs yield valid=false rows.
+
+    Run it as ``df.select("media_id", "blob").mapInPandas(
+    image_pixel_stats_batches, IMAGE_PIXEL_SCHEMA)``; callers that
+    synthesize media in Python (the entry fixtures) call it inside their
+    own batch function, so generator -> decoder is ONE MapInPandas node
+    instead of round-tripping every blob JVM->Python->JVM->Python
+    (guide §4)."""
     cols = ["media_id", "width", "height", "mean_r", "mean_g",
             "mean_b", "valid"]
     for b in batches:
@@ -806,28 +803,24 @@ AUDIO_FEATURE_SCHEMA = T.StructType([
 ])
 
 
-def audio_features(df: DataFrame) -> DataFrame:
-    """REAL audio features from WAV PCM sample decode (media table ->
-    one feature row per blob): rms energy, peak amplitude, zero-crossing
-    rate, duration. Integer PCM stats are computed in EXACT integer
-    arithmetic (``_exact_ssq`` split-dot sum of squares — safe at
-    24/32-bit widths where a plain int64 dot wraps — abs-max,
-    sign-change count) with one
-    final float division/sqrt, so results are bit-stable across
-    engines/batch orders — the property the DuckDB oracle query checks.
-    Non-WAV / compressed blobs yield valid=false rows. Same streaming
-    shape as the other extractors: mapInPandas, blob dropped before any
-    shuffle."""
-    return df.select("media_id", "blob").mapInPandas(
-        audio_features_batches, AUDIO_FEATURE_SCHEMA
-    )
-
-
 def audio_features_batches(
     batches: Iterator[pd.DataFrame],
 ) -> Iterator[pd.DataFrame]:
-    """Batch transform behind :func:`audio_features` (see
-    :func:`image_pixel_stats_batches` for why it is exposed)."""
+    """REAL audio features from WAV PCM sample decode, one
+    ``AUDIO_FEATURE_SCHEMA`` row per ``(media_id, blob)`` input row: rms
+    energy, peak amplitude, zero-crossing rate, duration. Multichannel
+    PCM is averaged to mono first. Integer PCM stats are computed in
+    EXACT integer arithmetic (``_exact_ssq`` split-dot sum of squares —
+    safe at 24/32-bit widths where a plain int64 dot wraps — abs-max,
+    sign-change count) with one final float division/sqrt, so results
+    are bit-stable across engines/batch orders — the property the DuckDB
+    oracle query checks. Non-WAV / compressed / null blobs yield
+    valid=false rows.
+
+    Run it as ``df.select("media_id", "blob").mapInPandas(
+    audio_features_batches, AUDIO_FEATURE_SCHEMA)``, the blob dropped
+    before any shuffle; see :func:`image_pixel_stats_batches` for the
+    fused generator -> decoder form."""
     cols = ["media_id", "sample_rate", "n_samples", "duration_sec",
             "rms", "peak", "zcr", "valid"]
     for b in batches:
@@ -878,26 +871,6 @@ def _skip_id3(blob: bytes) -> int:
     return 0
 
 
-def mp3_frame_header(blob: bytes) -> tuple[int, int] | None:
-    """(sample_rate, bitrate_kbps) from the first MPEG-1 Layer III
-    frame sync (11 set bits; version/layer/bitrate/rate fields per the
-    MPEG audio frame header layout). ID3v2 tags are skipped via their
-    syncsafe length. None when no valid frame is found."""
-    i = _skip_id3(blob)
-    n = len(blob)
-    while i + 4 <= n:
-        if blob[i] == 0xFF and (blob[i + 1] & 0xE0) == 0xE0:
-            version = (blob[i + 1] >> 3) & 0x3
-            layer = (blob[i + 1] >> 1) & 0x3
-            if version == 3 and layer == 1:  # MPEG-1 Layer III
-                br = _MP3_BITRATES[(blob[i + 2] >> 4) & 0xF]
-                sr = _MP3_RATES[(blob[i + 2] >> 2) & 0x3]
-                if br and sr:
-                    return (sr, br)
-        i += 1
-    return None
-
-
 MP3_SAMPLES_PER_FRAME = 1152  # MPEG-1 Layer III
 
 
@@ -908,8 +881,8 @@ def mp3_frame_walk(blob: bytes) -> tuple[int, int] | None:
     This is the exact per-file sample count VBR files need — the single
     first-frame header can't give it. Leading junk/padding after the
     ID3v2 tag (common in stream rips) is skipped by scanning forward to
-    the first valid frame sync — the same search ``mp3_frame_header``
-    does, so the two decoders accept the same blobs. From there frames
+    the first valid frame sync (11 set bits, MPEG-1 Layer III, a
+    non-zero bitrate and sample-rate index). From there frames
     must be contiguous: the walk stops at the first byte that is not a
     valid frame sync (truncated tail tolerated, trailing ID3v1 'TAG'
     block skipped). None when no frame parses."""

@@ -6,9 +6,10 @@ labels exist).
 The scoring plan is PURE CODEGEN: a left-to-right weighted sum of the
 native textstats columns plus a sigmoid — no UDF, no model object on
 the executors; weights travel as literals in the plan. Training is the
-seam: ``train_quality_model`` fits a ``pyspark.ml`` LogisticRegression
-on any labeled frame and returns plain floats that drop into the same
-``score_cols``. ``DEFAULT_WEIGHTS`` are hand-set placeholder
+seam: a ``pyspark.ml`` LogisticRegression fitted on ``feature_cols`` of
+any labeled frame gives plain floats that drop into the same
+``score_cols`` (tests/test_quality_model.py round-trips one).
+``DEFAULT_WEIGHTS`` are hand-set placeholder
 coefficients (signs follow the drop rules: more words/stopwords up,
 symbols/repetition down) — a real deployment replaces them with trained
 values via config.
@@ -99,34 +100,3 @@ def quality_model_score(
         (lg > F.lit(threshold_logit)).alias("keep"),
     )
 
-
-def train_quality_model(
-    df: DataFrame,
-    label_col: str,
-    text_col: str = "text",
-    reg_param: float = 0.0,
-) -> tuple[dict[str, float], float]:
-    """Fit the same feature set with pyspark.ml LogisticRegression and
-    return ({feature: weight}, bias) — plain floats that plug straight
-    into ``score_cols``/``quality_model_score`` (the model never ships
-    to executors as an object)."""
-    from pyspark.ml.classification import LogisticRegression
-    from pyspark.ml.feature import VectorAssembler
-
-    feats = feature_cols(F.col(text_col))
-    names = list(DEFAULT_WEIGHTS)
-    tr = df.select(
-        F.col(label_col).cast("double").alias("label"),
-        *[feats[n].alias(n) for n in names],
-    )
-    assembled = VectorAssembler(
-        inputCols=names, outputCol="features"
-    ).transform(tr)
-    model = LogisticRegression(
-        featuresCol="features", labelCol="label", regParam=reg_param
-    ).fit(assembled)
-    coefs = model.coefficients.toArray()
-    return (
-        {n: float(c) for n, c in zip(names, coefs)},
-        float(model.intercept),
-    )

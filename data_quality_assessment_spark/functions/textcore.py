@@ -85,13 +85,6 @@ def word_ids(tokens: list[str]):
         (get(w.lower(), VOCAB_UNK) for w in tokens), np.int64, len(tokens)
     )
 
-# Unicode script ranges for the deterministic language identifier.
-SCRIPT_RANGES: dict[str, tuple[tuple[int, int], ...]] = {
-    "xx_cyr": ((0x0400, 0x04FF),),
-    "xx_cjk": ((0x4E00, 0x9FFF), (0x3040, 0x30FF)),
-    "xx_deva": ((0x0900, 0x097F),),
-}
-_LATIN = ((0x41, 0x5A), (0x61, 0x7A))
 
 # ---------------------------------------------------------------------------
 # tokenization + native-twinned statistics
@@ -168,92 +161,6 @@ def top_bigram_share(text: str, tokens: list[str] | None = None) -> float:
 
 
 # ---------------------------------------------------------------------------
-# language identification (deterministic, script-range + stopword evidence)
-# ---------------------------------------------------------------------------
-
-
-def _build_script_bounds():
-    """Flatten _LATIN + SCRIPT_RANGES into one sorted boundary array so a
-    single ``searchsorted`` + ``bincount`` classifies every codepoint —
-    2 numpy ops per doc instead of ~14 per-range mask passes (the ranges
-    are disjoint, so slot counts equal the per-range mask counts exactly)."""
-    import numpy as np
-
-    spans: list[tuple[int, int, str]] = [(lo, hi, "latin") for lo, hi in _LATIN]
-    for k, rngs in SCRIPT_RANGES.items():
-        spans.extend((lo, hi, k) for lo, hi in rngs)
-    spans.sort()
-    for (_, hi_a, _), (lo_b, _, _) in zip(spans, spans[1:]):
-        assert hi_a < lo_b, "script ranges must be disjoint"
-    bounds: list[int] = []
-    slot_label: dict[int, str] = {}
-    for lo, hi, label in spans:
-        bounds.extend((lo, hi + 1))  # [lo, hi] inclusive -> right-open hi+1
-        slot_label[len(bounds) - 1] = label  # odd slot = inside the range
-    return np.asarray(bounds, dtype=np.uint32), slot_label
-
-
-_SCRIPT_BOUNDS, _SLOT_LABEL = _build_script_bounds()
-
-
-def script_counts(text: str) -> tuple[int, dict[str, int]]:
-    """(latin_count, {script: count}) over the codepoint array."""
-    import numpy as np
-
-    cp = np.frombuffer(text.encode("utf-32-le"), dtype=np.uint32)
-    idx = np.searchsorted(_SCRIPT_BOUNDS, cp, side="right")
-    c = np.bincount(idx, minlength=len(_SCRIPT_BOUNDS) + 1)
-    latin = 0
-    counts = {k: 0 for k in SCRIPT_RANGES}
-    for slot, label in _SLOT_LABEL.items():
-        v = int(c[slot]) if slot < len(c) else 0
-        if label == "latin":
-            latin += v
-        else:
-            counts[label] += v
-    return latin, counts
-
-
-def lang_id(
-    text: str, tokens: list[str] | None = None, ids=None
-) -> tuple[str, float]:
-    """Return (lang, confidence) — a fastText-API-shaped stand-in.
-
-    ``tokens``: pre-tokenized words (identical to ``tokenize(text)``) to
-    avoid re-splitting when the caller already has them. ``ids``: the
-    ``word_ids(tokens)`` array, if the caller (the fused enrich kernel)
-    already built it for perplexity — saves the lowercase+lookup pass.
-
-    fastText itself is unavailable offline (SURVEY.md §7.5); the loader
-    seam in ``langid.py`` allows swapping real model weights in. The
-    stand-in is fully deterministic: Unicode-script voting for non-Latin
-    scripts, stopword-hit-rate evidence for English.
-    """
-    if not text:
-        return ("unk", 0.0)
-    latin, counts = script_counts(text)
-    letters = latin + sum(counts.values())
-    if letters == 0:
-        return ("unk", 0.0)
-    best_script = max(counts, key=lambda k: (counts[k], k))
-    frac = counts[best_script] / letters
-    if frac >= 0.30:
-        return (best_script, round(frac, 6))
-    if latin / letters >= 0.50:
-        if ids is None:
-            ws = tokens if tokens is not None else tokenize(text)
-            ids = word_ids(ws)
-        n = len(ids)
-        sf = int((ids < N_STOPWORDS).sum()) / n if n else 0.0
-        iv = int((ids != VOCAB_UNK).sum()) / n if n else 0.0
-        conf = min(1.0, 0.6 * iv + 1.5 * sf + 0.05)
-        if conf >= 0.20:
-            return ("en", round(conf, 6))
-        return ("unk", round(conf, 6))
-    return ("unk", round(latin / letters, 6))
-
-
-# ---------------------------------------------------------------------------
 # PII / toxicity scrubber (compiled once at import; shared with the oracle)
 # ---------------------------------------------------------------------------
 
@@ -293,17 +200,6 @@ PHONE_TOKEN = "<PHONE>"
 IP_TOKEN = "<IP>"
 SLUR_TOKEN = "<SLUR>"
 
-# scrub order is frozen: email -> ip -> phone -> slur. Email before phone so
-# digits inside addresses are consumed first; IP before phone so dotted quads
-# are not half-eaten as phone fragments.
-_SCRUB_ORDER = (
-    ("pii_email", EMAIL_RE, EMAIL_TOKEN),
-    ("pii_ip", IPV4_RE, IP_TOKEN),
-    ("pii_phone", PHONE_RE, PHONE_TOKEN),
-    ("toxicity_slur", SLUR_RE, SLUR_TOKEN),
-)
-
-
 _DIGIT_RE = re.compile(r"\d")
 
 
@@ -320,6 +216,9 @@ def scrub_text(text: str) -> tuple[str, dict[str, int]]:
     result is identical to running every subn unconditionally (measured
     ~3x on clean web text, which is the common case).
     """
+    # scrub order is frozen: email -> ip -> phone -> slur. Email before
+    # phone so digits inside addresses are consumed first; IP before phone
+    # so dotted quads are not half-eaten as phone fragments.
     counts: dict[str, int] = {}
     out = text
     # email

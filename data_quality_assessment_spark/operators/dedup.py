@@ -84,8 +84,8 @@ def dedup_exact(
 ) -> DataFrame:
     """D2 with a deterministic winner (reference keeps first-in-file-order,
     which is nondeterministic under distribution — SURVEY.md §2.3). The
-    single row_number-dedup implementation — pipeline.dedup_pages and the
-    report path both route here."""
+    single row_number-dedup implementation — ``pipeline.run_pipeline``
+    and the driver's ``q_dedup_exact`` query both route here."""
     order = tiebreak if isinstance(tiebreak, list) else [tiebreak]
     w = Window.partitionBy(*keys).orderBy(*order)
     return (

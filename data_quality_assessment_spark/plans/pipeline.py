@@ -51,19 +51,6 @@ def content_tiebreak() -> Column:
     )
 
 
-def dedup_pages(df: DataFrame, keys: tuple[str, ...] = ("url", "warc_ts")) -> DataFrame:
-    from ..operators.dedup import dedup_exact
-
-    return dedup_exact(
-        df,
-        list(keys),
-        [
-            content_tiebreak().asc(),
-            F.coalesce(F.col("lang"), F.lit("")).asc(),
-        ],
-    )
-
-
 # ---------------------------------------------------------------------------
 # rule set — (rule_id, condition Column, drops?) in frozen order.
 # The oracle (tests/oracle.py) evaluates the same list in the same order.
@@ -160,16 +147,17 @@ def annotate(df: DataFrame, *, with_host: bool = True) -> DataFrame:
 
 def extracted_text_col() -> Column:
     """Native (whole-stage-codegen) twin of ``textcore.extract_text``:
-    decode html then strip tags, else the text column. Identical bytes
-    for valid UTF-8 input (the fixture/Common-Crawl-WET contract);
-    malformed byte sequences may differ in U+FFFD count between the JVM
-    and Python decoders. Every field the DAG derives from the text comes
-    from the enrich kernel (``kernel.enrich_batch_arrow``), which takes
-    the per-row ``textcore.extract_text`` path on invalid UTF-8, so only
-    text re-materialized through this twin can differ on that edge."""
+    decode html then strip tags, else the text column. ``make_valid_utf8``
+    replaces each malformed byte sequence with U+FFFD exactly as Python's
+    ``errors="replace"`` does (pinned on invalid-UTF-8 html by
+    tests/test_pipeline_parity.py), so the bytes are identical for any
+    input. ``decode(html, 'UTF-8')`` would raise on invalid UTF-8 under
+    ANSI mode and fail the task."""
     return F.when(
         F.col("html").isNotNull(),
-        F.regexp_replace(F.decode(F.col("html"), "UTF-8"), "<[^>]*>", ""),
+        F.regexp_replace(
+            F.make_valid_utf8(F.col("html").cast("string")), "<[^>]*>", ""
+        ),
     ).otherwise(F.coalesce(F.col("text"), F.lit("")))
 
 
@@ -221,9 +209,9 @@ def run_pipeline(
     dedup-first: the winner per (url, warc_ts) is picked by the same
     content-md5 order and annotations are deterministic per row. The
     trade is annotating exact-duplicate rows before dropping them —
-    right when exact (url, warc_ts) dups are the rare case; for inputs
-    with heavy exact duplication, dedup separately first
-    (``dedup_pages``) and call with ``dedup=False``.
+    right when exact (url, warc_ts) dups are the rare case. With
+    ``dedup=False`` every input row is annotated and judged (the
+    ``--no-dedup`` flag of ``jobs/run_pipeline.py``).
     """
     if dedup:
         # content tiebreak materialized BEFORE annotate so the window

@@ -115,7 +115,6 @@ def run_resumable(
     cfg: PipelineConfig = DEFAULT_CONFIG,
     *,
     num_parts: int | None = None,
-    dedup: bool = True,
 ) -> dict[str, int]:
     """Run the flagship DAG over all not-yet-completed partitions.
 
@@ -132,7 +131,7 @@ def run_resumable(
     if pending.isEmpty():
         return {"parts_done_prior": len(done_ids), "parts_run": 0}
 
-    out = pipeline.run_pipeline(pending, cfg, dedup=dedup).select(
+    out = pipeline.run_pipeline(pending, cfg).select(
         "part_id", *pipeline.OUTPUT_COLUMNS
     )
 

@@ -17,12 +17,13 @@ concatenation, so one decompress pass per file suffices.
 Scale shape: WARC is not line-splittable (records span arbitrary byte
 ranges; CC publishes ~1 GB files, well under an executor's memory), so
 the unit of work is one whole file. ``iter_rows_from_file_bytes`` parses
-a file's bytes in one streaming pass into rows of ``WARC_RECORD_SCHEMA``
-(url, warc_ts, html, ... — the engine's pages shape); a caller runs it
-inside ``mapInPandas``, as the ``warc_roundtrip`` query in
-``__spark_entry__.py`` does, so the raw bytes never cross a shuffle. Parity with the real format is
-pinned by round-trip tests over records WRITTEN by ``write_warc`` (spec
-layout) and by hand-built fixtures with multi-record gzip members.
+a file's bytes in one streaming pass into ``(url, warc_ts, warc_type,
+content_type, http_status, html)`` rows (the engine's pages shape); a
+caller runs it inside ``mapInPandas``, as the ``warc_roundtrip`` query
+in ``__spark_entry__.py`` does, so the raw bytes never cross a shuffle.
+Parity with the real format is pinned by round-trip tests over records
+WRITTEN by ``write_warc`` (spec layout) and by hand-built fixtures with
+multi-record gzip members.
 """
 
 from __future__ import annotations
@@ -31,17 +32,6 @@ import gzip
 import io
 from collections.abc import Iterator
 from datetime import datetime, timezone
-
-from pyspark.sql import types as T
-
-WARC_RECORD_SCHEMA = T.StructType([
-    T.StructField("url", T.StringType()),
-    T.StructField("warc_ts", T.TimestampType()),
-    T.StructField("warc_type", T.StringType()),
-    T.StructField("content_type", T.StringType()),
-    T.StructField("http_status", T.IntegerType()),
-    T.StructField("html", T.BinaryType()),
-])
 
 
 def iter_warc_records(fobj) -> Iterator[dict]:
@@ -115,11 +105,11 @@ def _iso_ts(s: str | None) -> datetime | None:
 
 
 def iter_rows_from_file_bytes(content: bytes) -> Iterator[tuple]:
-    """File bytes (.warc or .warc.gz) -> rows of WARC_RECORD_SCHEMA,
-    yielded as parsed. Gzip input decompresses INCREMENTALLY
-    (``gzip.GzipFile`` reads concatenated CC members transparently), so
-    peak memory is the raw file + one record —
-    never the whole decompressed stream."""
+    """File bytes (.warc or .warc.gz) -> ``(url, warc_ts, warc_type,
+    content_type, http_status, html)`` tuples, yielded as parsed. Gzip
+    input decompresses INCREMENTALLY (``gzip.GzipFile`` reads
+    concatenated CC members transparently), so peak memory is the raw
+    file + one record — never the whole decompressed stream."""
     fobj = (
         gzip.GzipFile(fileobj=io.BytesIO(content))
         if content[:2] == b"\x1f\x8b"

@@ -38,9 +38,6 @@ class Warehouse:
     def append(self, df: DataFrame, table: str) -> None:
         df.write.mode("append").parquet(self.path(table))
 
-    def overwrite(self, df: DataFrame, table: str) -> None:
-        df.write.mode("overwrite").parquet(self.path(table))
-
     def overwrite_partitions(
         self, df: DataFrame, table: str, partition_cols: list[str]
     ) -> None:
@@ -52,30 +49,3 @@ class Warehouse:
             .partitionBy(*partition_cols)
             .parquet(self.path(table))
         )
-
-    def write_bucketed(
-        self,
-        df: DataFrame,
-        table: str,
-        bucket_cols: list[str],
-        num_buckets: int = 32,
-    ) -> None:
-        """Catalog table bucketed (and sorted) by ``bucket_cols`` — the
-        co-located-join primitive: two tables bucketed the same way join
-        with NO Exchange (Iceberg analog: bucket(N, col) hidden
-        partitioning + storage-partitioned joins). Use for dimension
-        tables that are repeatedly joined on the same key (e.g. per-host
-        stats joined back to pages when the stats side outgrows
-        broadcast)."""
-        (
-            df.write.mode("overwrite")
-            .bucketBy(num_buckets, *bucket_cols)
-            .sortBy(*bucket_cols)
-            .option("path", self.path(table))
-            .saveAsTable(table)
-        )
-
-    def read_table(self, table: str) -> DataFrame:
-        """Read a catalog (bucketed) table — bucket metadata only
-        survives through the catalog, not a bare parquet path read."""
-        return self.spark.table(table)

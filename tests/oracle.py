@@ -4,10 +4,10 @@ quality DAG and (b) the reference's six IoT metrics with quirks Q1-Q9.
 (a) validates the Spark PLUMBING (Arrow UDF batching, native-Column twins,
 window dedup, distribution) against a straight-line pandas run;
 ``oracle_enrich`` is the per-doc enrich reference the vectorized kernel
-is pinned to (tests/test_kernel_parity.py). The
-per-row kernels (langid / ppl / scrub) are intentionally the same
-``textcore``/``lm`` modules — byte-identical scrubbed text is the contract
-(BASELINE.json input_hint) — while the heuristic stats are an independent
+is pinned to (tests/test_kernel_parity.py), and ``lang_id`` the per-doc
+language reference. The per-row kernels (ppl / scrub) are intentionally
+the same ``textcore``/``lm`` modules — byte-identical scrubbed text is
+the contract (BASELINE.json input_hint) — while the heuristic stats are an independent
 second implementation of the pinned tokenization spec.
 
 (b) re-derives the reference semantics exactly as cited in SURVEY.md §2;
@@ -24,7 +24,6 @@ scores that ``cadence.iat_freq_scores`` is pinned to.
 from __future__ import annotations
 
 import hashlib
-import json
 import math
 from dataclasses import dataclass
 
@@ -71,6 +70,83 @@ def oracle_dedup(df: pd.DataFrame) -> pd.DataFrame:
     return d.drop(columns=["_tb", "_tb2", "_ts_key"])
 
 
+# Unicode script ranges of the language identifier; the kernel's
+# lead-byte masks (``kernel._script_counts_bytes``) are pinned to them.
+SCRIPT_RANGES: dict[str, tuple[tuple[int, int], ...]] = {
+    "xx_cyr": ((0x0400, 0x04FF),),
+    "xx_cjk": ((0x4E00, 0x9FFF), (0x3040, 0x30FF)),
+    "xx_deva": ((0x0900, 0x097F),),
+}
+_LATIN = ((0x41, 0x5A), (0x61, 0x7A))
+
+
+def _build_script_bounds():
+    """Flatten _LATIN + SCRIPT_RANGES into one sorted boundary array so a
+    single ``searchsorted`` + ``bincount`` classifies every codepoint
+    (the ranges are disjoint, so slot counts equal the per-range mask
+    counts exactly)."""
+    spans: list[tuple[int, int, str]] = [(lo, hi, "latin") for lo, hi in _LATIN]
+    for k, rngs in SCRIPT_RANGES.items():
+        spans.extend((lo, hi, k) for lo, hi in rngs)
+    spans.sort()
+    for (_, hi_a, _), (lo_b, _, _) in zip(spans, spans[1:]):
+        assert hi_a < lo_b, "script ranges must be disjoint"
+    bounds: list[int] = []
+    slot_label: dict[int, str] = {}
+    for lo, hi, label in spans:
+        bounds.extend((lo, hi + 1))  # [lo, hi] inclusive -> right-open hi+1
+        slot_label[len(bounds) - 1] = label  # odd slot = inside the range
+    return np.asarray(bounds, dtype=np.uint32), slot_label
+
+
+_SCRIPT_BOUNDS, _SLOT_LABEL = _build_script_bounds()
+
+
+def script_counts(text: str) -> tuple[int, dict[str, int]]:
+    """(latin_count, {script: count}) over the codepoint array."""
+    cp = np.frombuffer(text.encode("utf-32-le"), dtype=np.uint32)
+    idx = np.searchsorted(_SCRIPT_BOUNDS, cp, side="right")
+    c = np.bincount(idx, minlength=len(_SCRIPT_BOUNDS) + 1)
+    latin = 0
+    counts = {k: 0 for k in SCRIPT_RANGES}
+    for slot, label in _SLOT_LABEL.items():
+        v = int(c[slot]) if slot < len(c) else 0
+        if label == "latin":
+            latin += v
+        else:
+            counts[label] += v
+    return latin, counts
+
+
+def lang_id(text: str, tokens: list[str] | None = None) -> tuple[str, float]:
+    """(lang, confidence) of one doc — the per-doc reference the
+    kernel's language decision is pinned to: Unicode-script voting for
+    non-Latin scripts, stopword and lexicon hit rates for English.
+    ``tokens``: ``textcore.tokenize(text)``, if the caller has it."""
+    if not text:
+        return ("unk", 0.0)
+    latin, counts = script_counts(text)
+    letters = latin + sum(counts.values())
+    if letters == 0:
+        return ("unk", 0.0)
+    best_script = max(counts, key=lambda k: (counts[k], k))
+    frac = counts[best_script] / letters
+    if frac >= 0.30:
+        return (best_script, round(frac, 6))
+    if latin / letters >= 0.50:
+        ids = textcore.word_ids(
+            tokens if tokens is not None else textcore.tokenize(text)
+        )
+        n = len(ids)
+        sf = int((ids < textcore.N_STOPWORDS).sum()) / n if n else 0.0
+        iv = int((ids != textcore.VOCAB_UNK).sum()) / n if n else 0.0
+        conf = min(1.0, 0.6 * iv + 1.5 * sf + 0.05)
+        if conf >= 0.20:
+            return ("en", round(conf, 6))
+        return ("unk", round(conf, 6))
+    return ("unk", round(latin / letters, 6))
+
+
 def oracle_enrich(html, text, model=None, ft=None) -> dict:
     """One doc's 14 enrich columns as the unfused composition of the
     public per-doc functions — the reference ``kernel.enrich_batch_arrow``
@@ -86,7 +162,7 @@ def oracle_enrich(html, text, model=None, ft=None) -> dict:
     toks = textcore.tokenize(txt)
     lang, conf = (
         ft.predict_lang(txt) if ft is not None
-        else textcore.lang_id(txt, toks)
+        else lang_id(txt, toks)
     )
     scrubbed, c = textcore.scrub_text(txt)
     nw = len(toks)
@@ -125,7 +201,7 @@ def oracle_pipeline(
             txt = text
         else:
             txt = ""
-        lang_pred, lang_conf = textcore.lang_id(txt)
+        lang_pred, lang_conf = lang_id(txt)
         ppl = model.perplexity(txt)
         tbs = textcore.top_bigram_share(txt)
         nw = textcore.n_words(txt)

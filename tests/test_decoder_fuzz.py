@@ -24,7 +24,6 @@ DECODERS = [
     J.jpeg_pixels,
     mm.wav_samples_raw,
     mm.mp3_frame_walk,
-    mm.mp3_frame_header,
 ]
 
 MAGICS = [

@@ -3,8 +3,6 @@ clean docs pass, the broadcast plan shape holds."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from data_quality_assessment_spark.operators import decontaminate as dc
 
 

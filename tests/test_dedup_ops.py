@@ -7,7 +7,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from data_quality_assessment_spark.functions.lm import sample_words
+from tests.fixture_gen import sample_words
 from data_quality_assessment_spark.operators import dedup
 
 
@@ -99,14 +99,18 @@ def test_dedup_exact_permutation_invariant(spark):
 
 
 def test_dedup_pages_html_only_deterministic_winner(spark):
-    """WARC-path D2 determinism: dup groups where content lives in
-    ``html`` (text null) must pick the same winner under any input
-    order / partitioning, and that winner must be the min
-    md5(text + hex(html)) row (plans/pipeline.content_tiebreak)."""
+    """WARC-path D2 determinism through the flagship's dedup: dup groups
+    where content lives in ``html`` (text null) must pick the same winner
+    under any input order / partitioning, and that winner must be the
+    min md5(text + hex(html)) row (plans/pipeline.content_tiebreak). The
+    winner is read back as its extracted text."""
     import datetime
     import hashlib
 
-    from data_quality_assessment_spark.plans.pipeline import dedup_pages
+    from data_quality_assessment_spark.plans.pipeline import (
+        materialize_scrubbed,
+        run_pipeline,
+    )
 
     ts = datetime.datetime(2024, 1, 1, tzinfo=datetime.timezone.utc)
     rows = []
@@ -120,9 +124,10 @@ def test_dedup_pages_html_only_deterministic_winner(spark):
     df = spark.createDataFrame(rows, schema)
 
     def winners(d):
+        out = materialize_scrubbed(run_pipeline(d))
         return {
-            (r.url, bytes(r.html))
-            for r in dedup_pages(d).select("url", "html").collect()
+            (r.url, r.scrubbed_text)
+            for r in out.select("url", "scrubbed_text").collect()
         }
 
     a = winners(df)
@@ -139,7 +144,7 @@ def test_dedup_pages_html_only_deterministic_winner(spark):
                 ("\x00" + h.hex().upper()).encode()
             ).hexdigest(),
         )
-        expect.add((f"https://h/{g}", best))
+        expect.add((f"https://h/{g}", best[3:-4].decode()))  # <p>, </p> stripped
     assert a == expect
 
 

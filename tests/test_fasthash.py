@@ -6,7 +6,6 @@ from __future__ import annotations
 import random
 import string
 
-import pytest
 from pyspark.sql import functions as F
 
 from data_quality_assessment_spark.functions.fasthash import _P31

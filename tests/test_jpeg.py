@@ -292,7 +292,9 @@ def test_image_pixel_stats_jpeg(spark):
     df = spark.createDataFrame(
         [(1, "image", blob, "image/jpeg")], mm.MEDIA_SCHEMA
     )
-    r = mm.image_pixel_stats(df).collect()[0]
+    r = df.select("media_id", "blob").mapInPandas(
+        mm.image_pixel_stats_batches, mm.IMAGE_PIXEL_SCHEMA
+    ).collect()[0]
     assert (r.width, r.height) == (8, 8)
     assert (r.mean_r, r.mean_g, r.mean_b) == (160.0, 160.0, 160.0)
     assert r.valid

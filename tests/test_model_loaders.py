@@ -6,7 +6,6 @@ network, no bundled binaries."""
 
 from __future__ import annotations
 
-import math
 import os
 import struct
 
@@ -138,7 +137,7 @@ def _fake_fasttext_header(tmp_path, magic=ml.FASTTEXT_MAGIC, model=3):
 def test_fasttext_header_roundtrip(tmp_path):
     h = ml.read_fasttext_header(_fake_fasttext_header(tmp_path))
     assert h.dim == 16 and h.minn == 2 and h.maxn == 4
-    assert h.is_supervised  # langid models are supervised
+    assert h.model == 3  # langid models are supervised
     assert h.t == pytest.approx(1e-4)
 
 

@@ -11,7 +11,7 @@ from data_quality_assessment_spark.plans.pipeline import (
     pages_out,
     run_pipeline,
 )
-from data_quality_assessment_spark.sources.fixture_gen import gen_pages
+from tests.fixture_gen import gen_pages
 from tests.oracle import oracle_pipeline
 
 
@@ -109,3 +109,40 @@ def test_dedup_permutation_invariant(spark):
         a.drop(columns=["rules_fired"]), b.drop(columns=["rules_fired"])
     )
     assert (a["rules_fired"].map(tuple) == b["rules_fired"].map(tuple)).all()
+
+
+def test_malformed_rows_match_oracle(spark):
+    """Malformed input lands as ordinary rows that equal the oracle's: a
+    doc over 1 MB, html that is entirely invalid UTF-8, text holding NUL
+    bytes, a row with html and text both null, and input partitions with
+    no rows at all (5 rows spread over 8 partitions)."""
+    import datetime
+
+    ts = datetime.datetime(2024, 1, 1)
+    line = "the data page is open and the words are fine here today"
+    big = "\n".join(f"{line} {i}" for i in range(20_000))
+    assert len(big.encode()) > 1 << 20
+    nul = "the data\x00 page is open\x00\x00 and the words are fine\x00"
+    rows = [
+        ("https://m/big", ts, b"<html><body>" + big.encode() + b"</body></html>",
+         None, "en"),
+        ("https://m/invalid", ts, b"\xff\xfe\xc0\x80\xed\xa0\x80" * 300, None, "en"),
+        ("https://m/nul", ts, None, nul * 3, "en"),
+        ("https://m/null", ts, None, None, None),
+        ("https://m/clean", ts, None, (line + "\n") * 2 + "a b", "en"),
+    ]
+    schema = "url string, warc_ts timestamp, html binary, text string, lang string"
+    df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 8), schema)
+    out = pages_out(materialize_scrubbed(run_pipeline(df))).toPandas()
+    ora = oracle_pipeline(pd.DataFrame(
+        rows, columns=["url", "warc_ts", "html", "text", "lang"]
+    ))
+    assert sorted(out["url"]) == sorted(ora["url"]) == sorted(r[0] for r in rows)
+    got = out.set_index("url")
+    for _, o in ora.iterrows():
+        s = got.loc[o["url"]]
+        for col in ora.columns.drop(["url", "warc_ts"]):
+            if col == "rules_fired":
+                assert list(s[col]) == list(o[col]), (o["url"], col)
+            else:
+                assert s[col] == o[col], (o["url"], col, s[col], o[col])

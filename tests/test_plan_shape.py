@@ -8,7 +8,7 @@ import pytest
 
 from data_quality_assessment_spark.config import DEFAULT_CONFIG
 from data_quality_assessment_spark.plans import pipeline as P
-from data_quality_assessment_spark.sources.fixture_gen import gen_pages
+from tests.fixture_gen import gen_pages
 
 
 @pytest.fixture(scope="module")
@@ -47,34 +47,6 @@ def test_filter_pushdown_reaches_scan(spark, pages_path):
     df = spark.read.parquet(pages_path).filter(F.col("lang") == "en")
     plan = _plan(df)
     assert "PushedFilters: [IsNotNull(lang), EqualTo(lang,en)]" in plan, plan
-
-
-def test_bucketed_join_has_no_shuffle(spark, tmp_path, pages_path):
-    """Two tables bucketed on the join key join with NO Exchange
-    (co-located join — the scale path when both sides outgrow
-    broadcast)."""
-    from pyspark.sql import functions as F
-
-    from data_quality_assessment_spark.sources.warehouse import Warehouse
-
-    wh = Warehouse(spark, str(tmp_path / "bwh"))
-    df = spark.read.parquet(pages_path).withColumn(
-        "host", F.substring_index(F.substring_index("url", "://", -1), "/", 1)
-    )
-    wh.write_bucketed(df.select("host", "url"), "b_pages", ["host"], 8)
-    wh.write_bucketed(
-        df.groupBy("host").count(), "b_stats", ["host"], 8
-    )
-    try:
-        j = wh.read_table("b_pages").join(
-            wh.read_table("b_stats").hint("merge"), "host"
-        )
-        plan = _plan(j)
-        assert "Exchange" not in plan, plan
-        assert j.count() > 0
-    finally:
-        spark.sql("DROP TABLE IF EXISTS b_pages")
-        spark.sql("DROP TABLE IF EXISTS b_stats")
 
 
 def test_host_stats_join_is_size_gated(spark, pages_path):

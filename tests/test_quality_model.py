@@ -61,7 +61,22 @@ def test_training_seam_roundtrip(spark):
     df = spark.createDataFrame(
         good + bad, "doc_id long, label int, text string"
     )
-    weights, bias = qm.train_quality_model(df, "label")
+    # fit the scorer's own features with pyspark.ml; the model never
+    # ships to executors as an object, only its weights as floats
+    from pyspark.ml.classification import LogisticRegression
+    from pyspark.ml.feature import VectorAssembler
+
+    feats = qm.feature_cols(F.col("text"))
+    names = list(qm.DEFAULT_WEIGHTS)
+    tr = df.select(
+        F.col("label").cast("double").alias("label"),
+        *[feats[n].alias(n) for n in names],
+    )
+    model = LogisticRegression(
+        featuresCol="features", labelCol="label", regParam=0.0
+    ).fit(VectorAssembler(inputCols=names, outputCol="features").transform(tr))
+    weights = dict(zip(names, model.coefficients.toArray().tolist()))
+    bias = float(model.intercept)
     assert set(weights) == set(qm.DEFAULT_WEIGHTS)
     scored = qm.quality_model_score(
         df, weights=weights, bias=bias

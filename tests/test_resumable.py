@@ -10,7 +10,7 @@ import pytest
 
 from data_quality_assessment_spark.config import DEFAULT_CONFIG
 from data_quality_assessment_spark.plans import resumable
-from data_quality_assessment_spark.sources.fixture_gen import gen_pages
+from tests.fixture_gen import gen_pages
 from data_quality_assessment_spark.sources.warehouse import Warehouse
 
 N_PARTS = 8
@@ -213,10 +213,15 @@ def test_commit_layout_and_side_table_plans(spark, tmp_path, pages):
     {"spark.sql.shuffle.partitions": "1"},
     {"spark.sql.shuffle.partitions": "7"},
     {"spark.sql.adaptive.enabled": "false"},
-], ids=["shuffle1", "shuffle7", "aqe_off"])
+    {"spark.sql.execution.arrow.maxRecordsPerBatch": "1"},
+    {"spark.sql.execution.arrow.maxRecordsPerBatch": "17"},
+    # 2x the test session's local[8] cores
+    {"spark.sql.shuffle.partitions": "16"},
+], ids=["shuffle1", "shuffle7", "aqe_off", "batch1", "batch17", "shuffle16"])
 def test_tables_invariant_to_shuffle_settings(spark, tmp_path, pages, cold_wh, conf):
     """The routing repartition follows spark.sql.shuffle.partitions and
-    AQE; the rows of every table must not."""
+    AQE, and the enrich kernel's Arrow batches follow
+    maxRecordsPerBatch; the rows of every table must not."""
     old = {k: spark.conf.get(k) for k in conf}
     for k, v in conf.items():
         spark.conf.set(k, v)

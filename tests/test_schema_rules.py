@@ -3,7 +3,6 @@
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from data_quality_assessment_spark.functions.schema_rules import (
     JsonSchema,

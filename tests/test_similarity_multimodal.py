@@ -343,11 +343,14 @@ def test_wav_header_decode():
 
 
 def test_mp3_frame_header():
+    """One (truncated) first frame after an optional ID3v2 tag: the walk
+    reads its header and counts that one frame."""
     frame = b"\xff\xfb\x90\x00" + b"\x00" * 16  # MPEG1 L3, 128k, 44100
-    assert mm.mp3_frame_header(frame) == (44100, 128)
+    one = (44100, mm.MP3_SAMPLES_PER_FRAME)
+    assert mm.mp3_frame_walk(frame) == one
     id3 = b"ID3\x04\x00\x00\x00\x00\x00\x0a" + b"\x00" * 10 + frame
-    assert mm.mp3_frame_header(id3) == (44100, 128)
-    assert mm.mp3_frame_header(b"\x00" * 64) is None
+    assert mm.mp3_frame_walk(id3) == one
+    assert mm.mp3_frame_walk(b"\x00" * 64) is None
 
 
 def test_audio_metadata_wav(spark):
@@ -433,7 +436,7 @@ def test_wav_samples_stereo_mono_mix():
     rate, ch, norm, x = mm.wav_samples_raw(blob)
     assert (rate, ch, norm) == (8000, 2, 32768.0)
     assert x.tolist() == inter.tolist()  # interleaved, not mixed
-    # audio_features mixes to mono: (100 + 300) / 2, (-100 - 300) / 2
+    # the feature batches mix to mono: (100 + 300) / 2, (-100 - 300) / 2
     import pandas as pd
 
     batch = pd.DataFrame({"media_id": [1], "blob": [blob]})
@@ -453,7 +456,12 @@ def test_audio_features_values(spark):
         (2, "audio", b"not a wav", "application/octet-stream"),
     ]
     df = spark.createDataFrame(rows, mm.MEDIA_SCHEMA)
-    got = {r.media_id: r for r in mm.audio_features(df).collect()}
+    got = {
+        r.media_id: r
+        for r in df.select("media_id", "blob").mapInPandas(
+            mm.audio_features_batches, mm.AUDIO_FEATURE_SCHEMA
+        ).collect()
+    }
     r1 = got[1]
     assert (r1.sample_rate, r1.n_samples) == (8000, 4)
     assert r1.duration_sec == 4 / 8000
@@ -582,7 +590,12 @@ def test_image_pixel_stats(spark):
         (2, "image", b"garbage", "application/octet-stream"),
     ]
     df = spark.createDataFrame(rows, mm.MEDIA_SCHEMA)
-    got = {r.media_id: r for r in mm.image_pixel_stats(df).collect()}
+    got = {
+        r.media_id: r
+        for r in df.select("media_id", "blob").mapInPandas(
+            mm.image_pixel_stats_batches, mm.IMAGE_PIXEL_SCHEMA
+        ).collect()
+    }
     r1 = got[1]
     assert (r1.width, r1.height) == (4, 4)
     assert (r1.mean_r, r1.mean_g, r1.mean_b) == (100.0, 50.0, 127.5)
@@ -743,7 +756,9 @@ def test_image_pixel_stats_gif(spark):
     rows = [(1, "image", _encode_gif(grid, palette, min_code_size=2),
              "image/gif")]
     df = spark.createDataFrame(rows, mm.MEDIA_SCHEMA)
-    r = mm.image_pixel_stats(df).collect()[0]
+    r = df.select("media_id", "blob").mapInPandas(
+        mm.image_pixel_stats_batches, mm.IMAGE_PIXEL_SCHEMA
+    ).collect()[0]
     assert (r.width, r.height) == (2, 2)
     assert (r.mean_r, r.mean_g, r.mean_b) == (8.0, 16.0, 32.0)
     assert r.valid
@@ -781,7 +796,9 @@ def test_audio_features_32bit_overflow_safe(spark):
     df = spark.createDataFrame(
         [(1, bytearray(blob))], "media_id long, blob binary"
     )
-    r = mm.audio_features(df).collect()[0]
+    r = df.select("media_id", "blob").mapInPandas(
+        mm.audio_features_batches, mm.AUDIO_FEATURE_SCHEMA
+    ).collect()[0]
     assert r.valid
     assert r.rms == pytest.approx(1.0, abs=1e-6)
     assert r.peak == pytest.approx(1.0, abs=1e-6)
@@ -840,7 +857,6 @@ def test_mp3_frame_walk_leading_junk():
     assert mm.mp3_frame_walk(clean) == (44100, 3 * mm.MP3_SAMPLES_PER_FRAME)
     junk = b"\x00paddingjunk\xfe" * 3 + clean
     assert mm.mp3_frame_walk(junk) == mm.mp3_frame_walk(clean)
-    assert mm.mp3_frame_header(junk) == (44100, 128)
     # junk containing a bare 0xFF that is NOT a valid sync is skipped too
     junk2 = b"\xff\x00\xff\xe0" + clean  # second: version/layer invalid
     assert mm.mp3_frame_walk(junk2) == (44100, 3 * mm.MP3_SAMPLES_PER_FRAME)

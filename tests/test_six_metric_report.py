@@ -7,7 +7,7 @@ from __future__ import annotations
 import pytest
 
 from data_quality_assessment_spark.plans import report
-from data_quality_assessment_spark.sources.fixture_gen import gen_iot
+from tests.fixture_gen import gen_iot
 from tests.oracle import oracle_six_metrics
 
 

@@ -11,7 +11,7 @@ def test_host_cadence_over_pages(spark):
     """Regular-interval hosts score near 1 on regularity; the fixture's
     irregular hosts score lower (north_star per-host cadence stage)."""
     from data_quality_assessment_spark.plans.pipeline import host_cadence
-    from data_quality_assessment_spark.sources.fixture_gen import gen_pages
+    from tests.fixture_gen import gen_pages
 
     pages = spark.createDataFrame(gen_pages(2000, seed=42))
     got = host_cadence(pages)

@@ -8,7 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from data_quality_assessment_spark.functions import textcore, textstats as ts
-from data_quality_assessment_spark.sources.fixture_gen import gen_pages
+from tests.fixture_gen import gen_pages
 
 TRICKY = [
     "",

@@ -4,7 +4,6 @@ Common Crawl), truncated-file tolerance and HTTP block parsing."""
 from __future__ import annotations
 
 import datetime as dt
-import gzip
 
 from data_quality_assessment_spark.sources import warc
 

@@ -7,9 +7,6 @@ from __future__ import annotations
 import random
 import string
 
-import pytest
-from pyspark.sql import functions as F
-
 from data_quality_assessment_spark.operators import winnow
 
 
@@ -169,7 +166,7 @@ def test_winnow_pairs_max_df_bounds_boilerplate_blowup(spark):
     two-doc copy (whose fingerprints have df=2) must survive the cap."""
     import numpy as np
 
-    from data_quality_assessment_spark.functions.lm import sample_words
+    from tests.fixture_gen import sample_words
 
     rng = np.random.RandomState(11)
     boiler = "this license header is identical across the entire corpus"
@@ -199,7 +196,7 @@ def test_minhash_candidates_max_df_bounds_identical_cluster(spark):
     identical docs) while distinct near-dup pairs survive."""
     import numpy as np
 
-    from data_quality_assessment_spark.functions.lm import sample_words
+    from tests.fixture_gen import sample_words
     from data_quality_assessment_spark.operators import dedup as dd
 
     rng = np.random.RandomState(12)
@@ -245,7 +242,7 @@ def test_substring_removal_max_partners_bounds_fan_in(spark):
     removed."""
     import numpy as np
 
-    from data_quality_assessment_spark.functions.lm import sample_words
+    from tests.fixture_gen import sample_words
 
     rng = np.random.RandomState(13)
     span = "the one long verbatim paragraph that must still be excised ok"

@@ -23,7 +23,7 @@ def main() -> None:
     os.makedirs(out_dir, exist_ok=True)
 
     import __spark_entry__ as entrymod
-    from bench import BENCH_QUERIES, _split_bytes, ensure_corpus
+    from bench import BENCH_QUERIES, ensure_corpus
     from data_quality_assessment_spark.session import get_spark
 
     spark = get_spark(

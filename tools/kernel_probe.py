@@ -5,11 +5,12 @@ top-bigram + scrub — the same code path as ``udfs.enrich_udf``) over a
 fixed synthetic doc batch in W worker processes, and reports aggregate
 docs/sec plus per-worker CPU time at 8 and 32 workers.
 
-Interpretation: the pure-spin ``host_probe.py`` shows the host's
-scheduling ceiling (~0.87 here); THIS probe shows the memory-subsystem
-ceiling for the real allocation-heavy kernel. If kernel efficiency is far
-below the spin ceiling, the 8->32 CPU-work inflation seen in bench.py is
-memory-bandwidth bound in the kernel itself, not Spark overhead.
+Interpretation: the probe shows the scaling ceiling of the real
+allocation-heavy kernel with no Spark in the way. If its 8->32
+efficiency is as low as bench.py's, the CPU-work inflation there is
+bound in the kernel itself (memory bandwidth, host scheduling), not
+Spark overhead. On a host with fewer than 32 cores the 32-worker level
+is oversubscribed and its efficiency says nothing about the kernel.
 
 Usage: python tools/kernel_probe.py [seconds_per_level] [doc_count]
 """
